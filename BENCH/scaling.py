@@ -133,7 +133,11 @@ def run_once(cores: int) -> dict:
             if time.time() - t0 > 3600:
                 proc.kill()
                 proc.wait()  # reap — no zombie (ADVICE r6)
-                raise RuntimeError(f"leg cores={cores} timed out after 3600s")
+                err_f.seek(0)
+                raise RuntimeError(
+                    f"leg cores={cores} timed out after 3600s\n"
+                    + err_f.read()[-2000:]
+                )
         out_f.seek(0)
         stdout = out_f.read()
         err_f.seek(0)

@@ -56,7 +56,15 @@ def uniqueness_check(
     # guard window below pays one tiny exchange instead — only dup keys
     # move. (The drift/hist cubes DO coalesce(1) safely: their partial aggs
     # bound per-task output to the cell-cube size.)
-    dup_keys = df.groupBy(*keys).count().filter(F.col("count") > 1)
+    # "Certain key" semantics, as SQL UNIQUE: a row with a NULL in any key
+    # column is exempt. groupBy lumps NULL keys into one group, but the
+    # left-semi join back never matches them, so the partition-key verdict
+    # shortcut below would count a group that has no sink rows. Dropping
+    # such groups here derives the verdict and the sink from one frame.
+    is_dup = F.col("count") > 1
+    for k in keys:
+        is_dup &= F.col(k).isNotNull()
+    dup_keys = df.groupBy(*keys).count().filter(is_dup)
     # Broadcast budget guard (ADVICE r2): a pathological keys config can make
     # a large share of the table "duplicates"; the explicit broadcast below
     # would then OOM the driver deep into the run. Enforce the budget IN-PLAN

@@ -2,7 +2,11 @@
 
 - Brute-force cosine top-k: broadcast the (small) query set against the
   corpus; dot products via zip_with + aggregate (JVM higher-order fns —
-  deterministic left-to-right fold in double precision, no UDF).
+  deterministic left-to-right fold in double precision).
+- IVF (ivf_cosine_topk): by default the probes x members scoring runs as a
+  cogrouped ``applyInPandas`` numpy GEMM, so the workers need numpy, pandas
+  and pyarrow. ``RAQC_SIMSEARCH_ARROW=0`` (or ``arrow=False``) selects the
+  JVM path, which scores pairs with the zip_with fold and no Python.
 - LSH-bucketed variant (scale path): sign-random-projection buckets from
   deterministic pseudo-random hyperplanes; candidates only join within a
   bucket, so cost tracks bucket occupancy instead of n².

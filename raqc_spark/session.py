@@ -32,6 +32,19 @@ ENGINE_CONF: dict[str, str] = {
         "RAQC_MAX_PARTITION_BYTES", "33554432"
     ),
     "spark.ui.enabled": "false",
+    # Whole-stage-codegen class cache (static conf, default 100). One JVM
+    # running the contract in both granularities, fresh and resumed, needs
+    # ~550 distinct generated classes: batched mode inlines each chunk's
+    # `partition_id IN (...)` literals, so every chunk (and every resumed
+    # single-pid chunk) compiles its own classes. At 100 the cache evicted
+    # them between passes and every pass recompiled from scratch (measured
+    # at local[4] on the 20k-file fixture: ~590 Janino compiles per
+    # batched4 pass and ~190 per run-mode pass, ~28 ms each, and the JIT
+    # then recompiles each reloaded class). At 1024, about twice the
+    # working set, repeat passes compile 0-16 classes and the batched4 wall
+    # drops to 0.82x. Classes average 2.7 KB of bytecode, so a full cache
+    # costs a few MB of metaspace.
+    "spark.sql.codegen.cache.maxEntries": "1024",
     # local mode: the driver heap is the only executor memory. Undersizing it
     # turns the 1 MB-content outlier rows into G1 old-gen churn — measured as
     # identical runs burning 2x CPU in GC. 48g on the 128 GiB sandbox host.
@@ -70,9 +83,22 @@ def get_spark(
         gc_threads = os.environ.get(
             "RAQC_GC_THREADS", str(max(4, min(8, host // 4)))
         )
+        # JIT thresholds x4 (CompileThresholdScaling). In local mode the
+        # JIT's compiler threads share the cores with the task threads, and
+        # a young JVM's first contract pass makes ~32k JIT compiles, mostly
+        # of Spark, Scala and JDK code (PrintCompilation, local[4]): at the
+        # default thresholds the C2 queue overflows, and how far the warm-up
+        # got decides how fast the next pass runs. Measured at local[4] on
+        # the 20k-file perfbench fixture, batched4 second pass, 8 JVMs each:
+        # default 12.79 s median (quartiles 12.27-13.78, one 17.34), x4
+        # 11.11 s (10.98-12.00); JIT time 28.2-41.5 -> 18.9-22.0 s. The
+        # run-mode third pass reads about the same (4 JVMs each: 6.96 vs
+        # 7.20 s median). Per-row code crosses even the scaled thresholds
+        # within its first partition, so long runs still reach C2.
         conf["spark.driver.extraJavaOptions"] = (
             f"-XX:ParallelGCThreads={gc_threads}"
             f" -XX:ConcGCThreads={max(1, int(gc_threads) // 4)}"
+            " -XX:CompileThresholdScaling=4"
         )
     if extra_conf:
         # Compose caller extraJavaOptions with the GC cap instead of letting

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from raqc_spark.checks.integrity import ref_integrity_check
@@ -52,8 +53,6 @@ def test_uniqueness_broadcast_budget_guard(spark, snapshots):
     """A pathological keys config (low-cardinality 'lang') makes huge swaths
     of the table duplicates; the in-plan budget guard must fail LOUD instead
     of broadcasting an unbounded dup-key table (ADVICE r2)."""
-    import pytest
-
     _, s2, _ = snapshots
     df = prepare(s2, default_contract())
     chk = Check(
@@ -75,6 +74,33 @@ def test_uniqueness_guard_passes_within_budget(spark, snapshots, code_fixture):
     _, violations = uniqueness_check(df, chk)
     got = {tuple(r) for r in violations.select(*KEY_COLS).collect()}
     assert got == fx.golden["uniqueness"]
+
+
+@pytest.mark.parametrize("shortcut", [False, True], ids=["semi_join", "dup_keys"])
+def test_uniqueness_null_keys_exempt(spark, shortcut):
+    """Certain-key semantics: a row with a NULL key column is never a
+    duplicate. Two (r1, NULL, c1) rows plus two (r1, p, c1) rows give two
+    violations, and the verdict agrees with the sink on both verdict paths
+    (semi-join counts, and the partition-key shortcut over dup keys)."""
+    from raqc_spark.contract import PartitionSpec
+    from raqc_spark.functions.hashing import partition_id_col
+
+    spec = PartitionSpec(key="repo", num_partitions=8)
+    rows = [("r1", None, "c1", f"s{i}", "python") for i in range(2)] + [
+        ("r1", "p", "c1", f"t{i}", "python") for i in range(2)
+    ]
+    df = spark.createDataFrame(
+        rows, "repo string, path string, commit string, "
+        "content_sha string, lang string",
+    ).withColumn("partition_id", partition_id_col(spec))
+    chk = Check("uniqueness", "uniqueness", threshold=Threshold("le", 0.0),
+                params=(("keys", ("repo", "path", "commit")),))
+    verdicts, violations = uniqueness_check(
+        df, chk, partition_spec=spec if shortcut else None
+    )
+    sink = violations.collect()
+    assert {r["path"] for r in sink} == {"p"}
+    assert verdicts.agg(F.sum("n_violations")).collect()[0][0] == 2 == len(sink)
 
 
 def test_uniqueness_splittable_requires_partition_key(spark, snapshots):

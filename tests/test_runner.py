@@ -6,6 +6,8 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+
 from raqc_spark.contract import default_contract
 from raqc_spark.runner import run_contract
 
@@ -290,3 +292,43 @@ def test_precount_off_forces_sequential_actions(
                  run_dir=str(tmp_path / "pc"), resume=False, cache=True,
                  granularity="run")
     assert seen == [False, True], "pre-counted cache keeps the overlap win"
+
+
+def _codegen_compiles(spark) -> int:
+    """Janino compiles so far in this JVM (Spark's own codegen metric)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+@pytest.mark.parametrize(
+    "kwargs, max_new",
+    [
+        # a tenth of the ~190 (run) and ~290 (batched4) classes a cold run
+        # compiles; a cache smaller than the working set recompiles them all
+        ({"granularity": "run"}, 19),
+        ({"granularity": "family", "partition_batches": 4}, 29),
+    ],
+    ids=["run", "batched4"],
+)
+def test_repeat_run_reuses_generated_code(
+    spark, snapshots, tmp_path, kwargs, max_new
+):
+    """A repeat run on identical inputs must find the first run's generated
+    classes in Spark's codegen cache instead of recompiling them.
+
+    AQE replans concurrent jobs in completion order, so a repeat run can
+    hit a plan variant the first run did not; in this shared session (more
+    classes than the cache holds) that variant may have been evicted. Such
+    misses were 0-16 classes per run, so the check takes the better of two
+    repeat runs."""
+    s1, s2, commits = snapshots
+
+    def run(name):
+        before = _codegen_compiles(spark)
+        run_contract(spark, default_contract(), s2, s1=s1,
+                     commits_dim=commits, run_dir=str(tmp_path / name),
+                     resume=False, **kwargs)
+        return _codegen_compiles(spark) - before
+
+    counts = [run(name) for name in ("first", "second", "third")]
+    assert min(counts[1:]) <= max_new, counts
