@@ -21,6 +21,7 @@ import os
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -237,24 +238,28 @@ def ivf_assignments(
     return centroids, ranked.select("doc", "cid")
 
 
-def _ivf_group_topk(k: int):
+def _ivf_group_topk(k: int, id_dtype):
     """Per-(list, sub-list) scorer for the Arrow path of ivf_cosine_topk:
     one BLAS matrix multiply replaces |probes|x|members| interpreted
     per-pair dot folds (guide §4.2 — batches to vectorized native code).
 
-    Emits each probe's local top-k (by rounded cosine DESC, c_id ASC — the
-    exact final-window ordering), i.e. the same partial reduction the JVM
-    plan's WindowGroupLimit performed, so the global window's result is
-    unchanged. Raw (unrounded) cosines are returned; the JVM rounds them,
-    so output VALUES are Spark-rounded exactly as before — numpy rounding
-    is used only as the local selection key (verified result-identical on
-    every fixture SF; parity is also pinned by a test)."""
+    Emits each probe's local top-k candidates, the same partial reduction
+    the JVM plan's WindowGroupLimit performed, so the global window's result
+    is unchanged. Raw (unrounded) cosines are returned and the JVM rounds
+    them, so output VALUES are Spark-rounded exactly as before. The local
+    cut is a superset: numpy rounds half-even on the binary value while
+    Spark's ``round`` is HALF_UP on the decimal string (5e-7 rounds to 0.0
+    in numpy, to 1e-6 in Spark), so the two keys can differ by one 1e-6
+    step. Every candidate whose numpy key is within one step of the k-th
+    key is kept, and the global window (rounded cosine DESC, c_id ASC)
+    makes the exact cut. Parity with the JVM path is pinned by a test.
+    ``id_dtype`` is the numpy dtype of the ids, for the empty frame."""
     import numpy as np
     import pandas as pd
 
     empty = {
-        "q_id": pd.Series(dtype="int64"),
-        "c_id": pd.Series(dtype="int64"),
+        "q_id": pd.Series(dtype=id_dtype),
+        "c_id": pd.Series(dtype=id_dtype),
         "cosine": pd.Series(dtype="float64"),
     }
 
@@ -267,24 +272,18 @@ def _ivf_group_topk(k: int):
         c_ids = right["c_id"].to_numpy()
         cn = right["c_norm"].to_numpy(dtype=np.float64)
         C = np.stack(right["c_vec"].to_numpy()).astype(np.float64)
-        # members sorted by c_id so a STABLE argsort on cosine breaks
-        # rounded-cosine ties by c_id ASC, matching the window ordering
-        order = np.argsort(c_ids, kind="stable")
-        c_ids, cn, C = c_ids[order], cn[order], C[order]
         S = Q @ C.T
         S /= qn[:, None]
         S /= cn[None, :]
         self_mask = q_ids[:, None] == c_ids[None, :]
-        key = np.where(self_mask, -np.inf, np.round(S, 6))
+        # key in whole steps of 1e-6 (np.round's own rint(x * 1e6)), so
+        # "within one step" is exact integer arithmetic
+        key = np.where(self_mask | np.isnan(S), -np.inf, np.rint(S * 1e6))
         kk = min(k, S.shape[1])
-        idx = np.argsort(-key, axis=1, kind="stable")[:, :kk]
-        keep = ~np.take_along_axis(self_mask, idx, axis=1).ravel()
+        kth = -np.partition(-key, kk - 1, axis=1)[:, kk - 1 : kk]
+        qi, ci = np.nonzero(~self_mask & (key >= kth - 1))
         return pd.DataFrame(
-            {
-                "q_id": np.repeat(q_ids, kk)[keep],
-                "c_id": c_ids[idx].ravel()[keep],
-                "cosine": np.take_along_axis(S, idx, axis=1).ravel()[keep],
-            }
+            {"q_id": q_ids[qi], "c_id": c_ids[ci], "cosine": S[qi, ci]}
         )
 
     return score
@@ -403,11 +402,21 @@ def ivf_cosine_topk(
         # pinned REPARTITION_BY_NUM exchanges, so cogroup reuses them and
         # the fan-out/skew properties of the replicated list join carry over
         # unchanged.
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        # ids keep their input type (string ids included)
+        id_type = emb.schema[id_col].dataType
+        out_schema = StructType([
+            StructField("q_id", id_type),
+            StructField("c_id", id_type),
+            StructField("cosine", DoubleType()),
+        ])
         local = (
             probes.groupBy("cid", "sub")
             .cogroup(members.groupBy("cid", "sub"))
             .applyInPandas(
-                _ivf_group_topk(k), "q_id long, c_id long, cosine double"
+                _ivf_group_topk(k, to_arrow_type(id_type).to_pandas_dtype()),
+                out_schema,
             )
         )
         scored = local.select(

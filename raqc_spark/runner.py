@@ -4,12 +4,17 @@ Analogue of RAQC's eager CLI pipeline (SURVEY.md §3.1), but lazy and
 resumable (BASELINE.json:14 "resumable from checkpoint with per-partition
 lineage + metrics"):
 
-- each check *family* (shared-scan group, plan.compile_plan) executes as one
-  Spark job writing its violations to ``<run_dir>/violations/family=<id>/``,
-  physically partitioned by ``partition_id`` and written with DYNAMIC
-  partition overwrite — a retry replaces exactly the partitions it
-  recomputed, never a sibling family's (or partition's) checkpointed output;
-- after each unit of work completes, a manifest entry is appended
+- each check *family* (shared-scan group, plan.compile_plan) writes its
+  violations to ``<run_dir>/violations/family=<id>/``, physically
+  partitioned by ``partition_id`` and written with DYNAMIC partition
+  overwrite — a retry replaces exactly the partitions it recomputed, never
+  a sibling family's (or partition's) checkpointed output;
+- one executor, ``_run_lane``, runs every contract: a *lane* is a list of
+  families run chunk by chunk, each chunk as one union violations write
+  and one union verdict collect. ``granularity`` picks the lanes (one per
+  family, or one for the whole contract) and ``partition_batches`` the
+  chunks (each splittable family cut into that many partition_id batches);
+- after each chunk, a manifest entry per family is committed
   **atomically** (write-tmp-then-rename, SURVEY.md §7.3.4) carrying
   per-partition lineage: n_rows, n_violations, metric and pass per
   (check, partition_id), plus a ``complete`` flag per family;
@@ -19,14 +24,13 @@ lineage + metrics"):
 - re-running with the same run_dir skips completed families outright and,
   for a partially-completed splittable family, recomputes ONLY the missing
   partition_ids (the completed partitions' verdicts are reconstructed from
-  the manifest — no recompute, no rescan);
-- ``partition_batches > 1`` runs each splittable family as several partition
-  batches with a manifest commit after each — bounded retry blast radius at
-  10^12-file scale, and the unit a mid-family crash resumes from.
+  the manifest — no recompute, no rescan); a chunk is the unit a crash
+  loses and a resume restarts from.
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import os
@@ -180,9 +184,6 @@ class Manifest:
             entry["complete"] = bool(complete)
             self._swap(data)
 
-    def complete_family(self, family: str, verdict_rows: list[dict]) -> None:
-        self.record(family, verdict_rows, complete=True)
-
     def state(self) -> dict[str, tuple[list[dict], bool]]:
         """family -> (verdict rows so far, complete?)."""
         out = {}
@@ -212,110 +213,77 @@ def _write_violations(
     )
 
 
-def _batches(pids: frozenset[int], n: int) -> list[frozenset[int]]:
-    ordered = sorted(pids)
-    n = max(1, min(n, len(ordered)))
-    size = (len(ordered) + n - 1) // n
+def _chunks(
+    fam: CompiledFamily,
+    pids: frozenset[int] | None,
+    all_pids: frozenset[int],
+    partition_batches: int,
+) -> list[frozenset[int] | None]:
+    """A family's partition chunks, in order: a splittable family's ``pids``
+    (``None`` = all) cut into ``partition_batches`` batches, anything else
+    one chunk of ``pids`` as given (``None`` keeps the unfiltered plan)."""
+    if not fam.splittable or partition_batches <= 1:
+        return [pids]
+    ordered = sorted(pids or all_pids)
+    size = -(-len(ordered) // partition_batches)  # ceil division
     return [
         frozenset(ordered[i : i + size]) for i in range(0, len(ordered), size)
     ]
 
 
-def _run_family(
-    fam: CompiledFamily,
-    run_dir: str,
-    manifest: Manifest,
-    pids: frozenset[int] | None = None,
-    partition_batches: int = 1,
-    all_pids: frozenset[int] | None = None,
-) -> list[dict]:
-    """Run one family (optionally restricted to ``pids``), committing the
-    manifest per partition batch. Returns the verdict rows it computed."""
-    if fam.splittable and partition_batches > 1:
-        target = pids if pids is not None else (all_pids or frozenset())
-        chunks: list[frozenset[int] | None] = list(
-            _batches(target, partition_batches)
-        ) or [None]
-    else:
-        chunks = [pids]
-
-    out = os.path.join(run_dir, "violations", f"family={_safe(fam.name)}")
-    all_rows: list[dict] = []
-    for i, chunk in enumerate(chunks):
-        verdicts, violations = fam.build(chunk)
-        # NOT overlapped (unlike run mode, r5): family threads already run
-        # concurrently, so doubling each thread's in-flight actions was
-        # measured to oversubscribe the scheduler and SLOW batched mode
-        # (quiet probe: 22.9-25.0s vs 17.4-20.7s sequential on the 600k
-        # fixture at local[32]) — run mode wins from overlap because it has
-        # exactly two actions total, not 2 x families x batches.
-        if violations is not None:
-            _write_violations(violations, out)
-        rows = [r.asDict() for r in verdicts.collect()]  # tiny: P × checks
-        manifest.record(fam.name, rows, complete=(i == len(chunks) - 1))
-        all_rows.extend(rows)
-    return all_rows
-
-
-def _run_batched(
+def _run_lane(
     work: list[tuple[CompiledFamily, frozenset[int] | None]],
     run_dir: str,
     manifest: Manifest,
-    overlap: bool = True,
+    partition_batches: int,
+    all_pids: frozenset[int],
+    overlap: bool,
 ) -> list[dict]:
-    """granularity='run': union every family's violations into ONE write and
-    every family's verdicts into ONE collect (two actions total), then split
-    the collected rows back out into per-family manifest entries. The union
-    write is partitioned by (family, partition_id) with dynamic overwrite, so
-    families absent from this run — e.g. already-checkpointed ones during a
-    resume — keep their violation parquet intact."""
-    verdict_parts, viol_parts = [], []
-    for fam, pids in work:
-        v, viol = fam.build(pids)
-        verdict_parts.append(v)
-        if viol is not None:
-            viol_parts.append(viol.withColumn("family", F.lit(_safe(fam.name))))
+    """Run a lane of families chunk by chunk. Chunk i builds every family
+    that has an i-th chunk, writes their violations as ONE union write
+    (partitioned by (family, partition_id) with dynamic overwrite, so other
+    families' and other chunks' sinks stay intact) and collects their
+    verdicts as ONE union collect, side by side when ``overlap``; then each
+    family's manifest entry is committed. Returns the verdict rows."""
+    plans = [
+        (fam, _chunks(fam, pids, all_pids, partition_batches))
+        for fam, pids in work
+    ]
+    owner = {c.name: fam.name for fam, _ in work for c in fam.checks}
+    out = os.path.join(run_dir, "violations")
+    all_rows: list[dict] = []
+    for i in range(max((len(chunks) for _, chunks in plans), default=0)):
+        step = [(fam, chunks) for fam, chunks in plans if i < len(chunks)]
+        verdict_parts, viol_parts = [], []
+        for fam, chunks in step:
+            verdicts, violations = fam.build(chunks[i])
+            verdict_parts.append(verdicts)
+            if violations is not None:
+                viol_parts.append(
+                    violations.withColumn("family", F.lit(_safe(fam.name)))
+                )
 
-    def _write() -> None:
-        if not viol_parts:
-            return
-        allv = viol_parts[0]
-        for p in viol_parts[1:]:
-            allv = allv.unionByName(p)
-        out = os.path.join(run_dir, "violations")
-        _write_violations(allv, out, keys=("family", "partition_id"))
+        def _write() -> None:
+            if viol_parts:
+                union = functools.reduce(lambda a, b: a.unionByName(b), viol_parts)
+                _write_violations(union, out, keys=("family", "partition_id"))
 
-    def _collect() -> list[dict]:
-        return [r.asDict() for r in union_verdicts(verdict_parts).collect()]
+        def _collect() -> list[dict]:
+            return [r.asDict() for r in union_verdicts(verdict_parts).collect()]
 
-    # The two actions are independent DAGs over the same (cached) prepared
-    # snapshot — submit them from concurrent driver threads, like family
-    # mode already does per family, so each action's straggler tail and
-    # inter-job driver gaps overlap with the other's work (the r4 event-log
-    # decomposition charged ~7s of the 58s local[8] wall to packing slack).
-    # Caveat measured in r5: with a COLD cache the two actions double-
-    # compute the scan (cross-action cache fill is not cooperative the way
-    # one action's AQE leaf stages are) — run_contract therefore
-    # pre-materializes the cache before calling here (see the pre-count
-    # above). Defaulted ON after the interleaved quiet 3-way A/B showed
-    # pre-count+overlap fastest at both local[2] and local[8]
-    # (BENCH/BASELINE.md r5); RAQC_RUN_OVERLAP=0 restores sequential.
-    if overlap and os.environ.get("RAQC_RUN_OVERLAP", "1") == "1":
-        with ThreadPoolExecutor(max_workers=2) as pool2:
-            fut_w = pool2.submit(_write)
-            fut_c = pool2.submit(_collect)
-            rows = fut_c.result()
-            fut_w.result()
-    else:
-        _write()
-        rows = _collect()
-    by_check: dict[str, list[dict]] = {}
-    for r in rows:
-        by_check.setdefault(r["check_name"], []).append(r)
-    for fam, _pids in work:
-        fam_rows = [r for c in fam.checks for r in by_check.get(c.name, [])]
-        manifest.record(fam.name, fam_rows, complete=True)
-    return rows
+        if overlap:
+            with ThreadPoolExecutor(max_workers=1) as writer:
+                written = writer.submit(_write)
+                rows = _collect()
+                written.result()
+        else:
+            _write()
+            rows = _collect()
+        for fam, chunks in step:
+            fam_rows = [r for r in rows if owner[r["check_name"]] == fam.name]
+            manifest.record(fam.name, fam_rows, complete=i == len(chunks) - 1)
+        all_rows.extend(rows)
+    return all_rows
 
 
 def run_contract(
@@ -336,19 +304,20 @@ def run_contract(
     (right call in local/bench mode; on a 100 TB cluster rely on the
     shared-scan fusion instead and pass cache=False).
 
-    ``granularity`` — checkpoint/action granularity:
-      * ``"family"``: one violations write + one verdict collect per check
-        family; resumable at family level, and at partition level when a
-        family checkpointed partially (the default).
-      * ``"run"``: the whole contract executes as TWO actions — one union
-        violations write, one union verdict collect. ~5x fewer job barriers,
-        the right mode for throughput runs; the manifest still records
-        per-partition lineage afterwards, so a re-run resumes either way.
+    ``granularity`` picks the lanes, which run concurrently:
+      * ``"family"`` (the default): one lane per check family, so every
+        family has its own write and collect per chunk;
+      * ``"run"``: one lane of the whole contract, so each chunk is TWO
+        actions — one union violations write, one union verdict collect —
+        the right mode for throughput runs.
+    Either way the manifest records per-partition lineage per family, so a
+    re-run resumes at family and partition level in both.
 
-    ``partition_batches`` — with granularity='family', split each splittable
-    family into this many partition_id batches, checkpointing the manifest
-    after each: a crash loses at most one batch, and the resume recomputes
-    only the partitions with no manifest entry.
+    ``partition_batches`` picks the chunks: each splittable family is split
+    into this many partition_id batches (non-splittable ones run whole in
+    the first chunk), checkpointing the manifest after each: a crash loses
+    at most one chunk, and the resume recomputes only the partitions with
+    no manifest entry.
 
     ``resume=False`` starts clean: prior manifest and violation sinks under
     ``run_dir`` are removed (a fresh run must not inherit stale partitions).
@@ -392,7 +361,7 @@ def run_contract(
             s1p = s1p.select("partition_id", *drift_cols).persist()
             persist_pool.append(s1p)
     if cache:
-        if granularity == "family" and partition_batches > 1:
+        if partition_batches > 1:
             # Local (no-shuffle) sort by partition_id before caching: the
             # in-memory columnar batches become runs of a single pid, so each
             # partition-batch build's `partition_id IN (...)` filter prunes
@@ -430,58 +399,31 @@ def run_contract(
             # untouched, or partial-but-unsplittable: (re)run fully
             work.append((fam, None))
     try:
-        precount_done = False
-        if cache and work and (
-            granularity != "run"
-            or os.environ.get("RAQC_RUN_PRECOUNT", "1") == "1"
-        ):
-            # materialize the cache once before the concurrent-action
-            # fan-out (family threads, or run mode's write∥collect pair).
-            # History: r4 measured a pre-count at +13%/local[2] against the
-            # then-SEQUENTIAL run mode (one action's AQE leaf stages fill
-            # the cache cooperatively, so the pre-count only added a
-            # barrier). With r5's overlapped actions the trade inverts:
-            # cross-action fill is NOT cooperative — two cold actions
-            # double-compute the scan (measured 229s vs 174s seq at
-            # local[2]) — while pre-count + overlap beats sequential at
-            # BOTH levels (local[2] 156.5s vs 173.8s; local[8] 50.7s vs
-            # 55.4s; interleaved quiet A/B, BENCH/BASELINE.md r5).
+        # One lane per family (granularity="family"), or one lane of every
+        # family (granularity="run"); lanes run concurrently. On small data
+        # the per-family threads are what hide the gaps between jobs: one
+        # lane running the batched contract chunk after chunk (8 actions)
+        # measured 1.26x slower on batched4 at local[4] (wall 9.98 -> 12.56 s
+        # median, 0/5 wins), while per-family lanes matched the separate
+        # family and run executors they replaced (batched4 10.05 -> 9.83 s,
+        # 10 pairs; run 5.64 -> 5.83 s, 5 pairs). A lane overlaps its write
+        # and collect only over a filled cache (overlap=cache): two actions
+        # over an unfilled cache each compute the scan (measured 229 s vs
+        # 174 s sequential at local[2]), so one count fills it first.
+        if cache and work:
             s2p.count()
-            precount_done = True
-        if granularity == "run" and work:
-            # overlap only when the prepared snapshot is cached AND the
-            # pre-count actually ran: either miss means the two concurrent
-            # actions fill a cold cache non-cooperatively and double-
-            # compute the scan (measured 229s vs 174s seq at local[2], r5).
-            # Gating on precount_done (not just cache) closes the ADVICE
-            # r5 env-combination hazard RAQC_RUN_PRECOUNT=0 +
-            # RAQC_RUN_OVERLAP=1, which previously composed into exactly
-            # that known-bad mode.
-            all_rows.extend(
-                _run_batched(
-                    work, run_dir, manifest, overlap=cache and precount_done
+        lanes = [work] if granularity == "run" else [[w] for w in work]
+        with ThreadPoolExecutor(max_workers=max(1, len(lanes))) as pool:
+            futures = [
+                pool.submit(
+                    _run_lane, lane, run_dir, manifest, partition_batches,
+                    all_pids, cache,
                 )
-            )
-            ran.extend(f.name for f, _ in work)
-        else:
-            # Families are independent DAGs -> submit them from concurrent
-            # driver threads; Spark's scheduler interleaves their stages so
-            # small stages don't serialize the whole contract (FAIR-ish use
-            # of the cluster without touching scheduler pools).
-            workers = int(os.environ.get("RAQC_FAMILY_WORKERS", "0")) or max(
-                1, len(work)
-            )
-            with ThreadPoolExecutor(max_workers=workers) as pool:
-                futures = [
-                    pool.submit(
-                        _run_family, fam, run_dir, manifest, pids,
-                        partition_batches, all_pids,
-                    )
-                    for fam, pids in work
-                ]
-                for (fam, _), fut in zip(work, futures, strict=True):
-                    all_rows.extend(fut.result())
-                    ran.append(fam.name)
+                for lane in lanes
+            ]
+            for fut in futures:
+                all_rows.extend(fut.result())
+        ran.extend(fam.name for fam, _ in work)
     finally:
         if cache:
             s2p.unpersist()

@@ -27,10 +27,8 @@ ENGINE_CONF: dict[str, str] = {
     # at 6-way parallelism (measured: local[8] ran scans 75% utilized).
     # 32 MB gives full utilization at local-mode core counts; a real
     # multi-executor deployment with many input files should leave the
-    # 128 MB default (override via RAQC_MAX_PARTITION_BYTES).
-    "spark.sql.files.maxPartitionBytes": os.environ.get(
-        "RAQC_MAX_PARTITION_BYTES", "33554432"
-    ),
+    # 128 MB default (override through get_spark's extra_conf).
+    "spark.sql.files.maxPartitionBytes": "33554432",
     "spark.ui.enabled": "false",
     # Whole-stage-codegen class cache (static conf, default 100). One JVM
     # running the contract in both granularities, fresh and resumed, needs
@@ -48,7 +46,8 @@ ENGINE_CONF: dict[str, str] = {
     # local mode: the driver heap is the only executor memory. Undersizing it
     # turns the 1 MB-content outlier rows into G1 old-gen churn — measured as
     # identical runs burning 2x CPU in GC. 48g on the 128 GiB sandbox host.
-    "spark.driver.memory": os.environ.get("RAQC_DRIVER_MEM", "48g"),
+    # Override through get_spark's extra_conf.
+    "spark.driver.memory": "48g",
 }
 
 
@@ -76,13 +75,11 @@ def get_spark(
         # measured interleaved A/B on the 663k-row fixture at local[32]:
         # default 10.95/11.48s vs ParallelGCThreads=8 6.09s (1.8x), with
         # 4/8/16 reading 7.22/8.08/9.46 and the default worst. Sized
-        # host//4 capped to [4, 8]; RAQC_GC_THREADS overrides, and any
-        # caller-supplied extraJavaOptions wins untouched (cluster
+        # host//4 capped to [4, 8]; caller extraJavaOptions come after
+        # these flags, so a caller -XX:ParallelGCThreads wins (cluster
         # deployments configure executor JVMs via spark-submit instead).
         host = os.cpu_count() or 8
-        gc_threads = os.environ.get(
-            "RAQC_GC_THREADS", str(max(4, min(8, host // 4)))
-        )
+        gc_threads = max(4, min(8, host // 4))
         # JIT thresholds x4 (CompileThresholdScaling). In local mode the
         # JIT's compiler threads share the cores with the task threads, and
         # a young JVM's first contract pass makes ~32k JIT compiles, mostly
@@ -97,7 +94,7 @@ def get_spark(
         # within its first partition, so long runs still reach C2.
         conf["spark.driver.extraJavaOptions"] = (
             f"-XX:ParallelGCThreads={gc_threads}"
-            f" -XX:ConcGCThreads={max(1, int(gc_threads) // 4)}"
+            f" -XX:ConcGCThreads={max(1, gc_threads // 4)}"
             " -XX:CompileThresholdScaling=4"
         )
     if extra_conf:

@@ -116,14 +116,10 @@ def test_minhash_estimate_tracks_exact_jaccard(spark):
         assert abs(e - x) <= 4 * 0.0625, (pair, e, x)
 
 
-def test_ivf_ann_recall_on_clustered_data(spark):
-    """IVF's contract is cluster structure: on clustered vectors the probed
-    inverted lists must recover >= 0.9 of exact top-k. (On the near-uniform
-    driver embeddings IVF measures ~0.6 — that is the data violating IVF's
-    assumption, which is why lsh_cosine_topk is the default scale path.)"""
+def _clustered_embeddings(spark, id_of=int):
+    """480 vectors in 8 tight clusters (16 dims); ``id_of`` maps the row
+    index to its vec_id."""
     import numpy as np
-
-    from raqc_spark.functions.simsearch import ivf_cosine_topk
 
     rng = np.random.default_rng(11)
     centers = rng.normal(0, 1, (8, 16))
@@ -131,8 +127,18 @@ def test_ivf_ann_recall_on_clustered_data(spark):
     for i in range(480):
         c = i % 8
         v = centers[c] + rng.normal(0, 0.15, 16)
-        rows.append((i, [float(x) for x in v]))
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
+        rows.append((id_of(i), [float(x) for x in v]))
+    return spark.createDataFrame(rows, ["vec_id", "embedding"])
+
+
+def test_ivf_ann_recall_on_clustered_data(spark):
+    """IVF's contract is cluster structure: on clustered vectors the probed
+    inverted lists must recover >= 0.9 of exact top-k. (On the near-uniform
+    driver embeddings IVF measures ~0.6 — that is the data violating IVF's
+    assumption, which is why lsh_cosine_topk is the default scale path.)"""
+    from raqc_spark.functions.simsearch import ivf_cosine_topk
+
+    df = _clustered_embeddings(spark)
     gt = {
         (r["q_id"], r["c_id"])
         for r in cosine_topk(df, df, k=3).collect()
@@ -143,6 +149,74 @@ def test_ivf_ann_recall_on_clustered_data(spark):
     }
     recall = len(gt & ann) / len(gt)
     assert recall >= 0.9, f"IVF recall {recall:.3f} < 0.9 on clustered data"
+
+
+def test_ivf_arrow_path_matches_jvm_path(spark):
+    """The Arrow GEMM scorer and the JVM fold path return the same rows
+    (ids, Spark-rounded cosines and ranks) on the clustered data."""
+    from raqc_spark.functions.simsearch import ivf_cosine_topk
+
+    df = _clustered_embeddings(spark)
+
+    def rows(arrow):
+        q = ivf_cosine_topk(df, k=3, num_centroids=16, nprobe=4, arrow=arrow)
+        return {tuple(r) for r in q.collect()}
+
+    arrow_rows = rows(True)
+    assert len(arrow_rows) == 480 * 3
+    assert arrow_rows == rows(False)
+
+
+def test_ivf_string_ids_keep_their_type(spark):
+    """String ids flow through the Arrow scorer as strings and give the
+    same neighbours as the integer-id run mapped through the same ids.
+    Probing every list makes the search exact, so the centroids (chosen by
+    id hash, which differs between the two id types) do not matter; the
+    zero-padded ids keep the c_id tie order."""
+    from pyspark.sql.types import StringType
+
+    from raqc_spark.functions.simsearch import ivf_cosine_topk
+
+    name = "v{:04d}".format
+    kw = dict(k=3, num_centroids=8, nprobe=8, arrow=True)
+    by_int = ivf_cosine_topk(_clustered_embeddings(spark), **kw)
+    by_str = ivf_cosine_topk(_clustered_embeddings(spark, name), **kw)
+    assert by_str.schema["q_id"].dataType == StringType()
+    assert by_str.schema["c_id"].dataType == StringType()
+    expect = {
+        (name(r["q_id"]), name(r["c_id"]), r["cosine"], r["rk"])
+        for r in by_int.collect()
+    }
+    assert {tuple(r) for r in by_str.collect()} == expect
+
+
+def test_ivf_local_topk_keeps_half_up_ties(spark):
+    """The scorer's local top-k must not cut a candidate that Spark's
+    HALF_UP rounding ties with the k-th: round(5e-7, 6) is 1e-6 in Spark
+    (0.0 under numpy's half-even), so c_id 1 ties c_id 2 and wins on
+    c_id ASC in the final window. Norms are 1.0 so the cosines are exact."""
+    import numpy as np
+    import pandas as pd
+
+    from raqc_spark.functions.simsearch import _ivf_group_topk
+
+    spark_rounded = spark.range(1).select(
+        F.round(F.lit(5e-7), 6).alias("a"), F.round(F.lit(1e-6), 6).alias("b")
+    ).first()
+    assert spark_rounded["a"] == spark_rounded["b"] == 1e-6
+
+    left = pd.DataFrame(
+        {"q_id": [0], "q_norm": [1.0], "q_vec": [np.array([1.0])]}
+    )
+    right = pd.DataFrame(
+        {
+            "c_id": [1, 2],
+            "c_norm": [1.0, 1.0],
+            "c_vec": [np.array([5e-7]), np.array([1e-6])],
+        }
+    )
+    out = _ivf_group_topk(1, "int64")(left, right)
+    assert 1 in set(out["c_id"]), out
 
 
 def test_ivf_scoring_fanout_survives_aqe(spark):

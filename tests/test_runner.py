@@ -154,9 +154,11 @@ def test_resume_recomputes_only_missing_partitions(spark, snapshots, tmp_path):
             assert tuple(r) == full_rows[(r["check_name"], r["partition_id"])]
 
 
-def test_partition_batches_equivalent(spark, snapshots, tmp_path):
+@pytest.mark.parametrize("granularity", ["family", "run"])
+def test_partition_batches_equivalent(spark, snapshots, tmp_path, granularity):
     """partition_batches=3 must yield identical verdicts/violations to a
-    single-shot run, with every family complete in the manifest."""
+    single-shot run, with every family complete in the manifest, whichever
+    lanes (granularity) run the chunks."""
     from raqc_spark.runner import Manifest
 
     s1, s2, commits = snapshots
@@ -164,7 +166,7 @@ def test_partition_batches_equivalent(spark, snapshots, tmp_path):
                      run_dir=str(tmp_path / "one"), resume=False)
     b = run_contract(spark, default_contract(), s2, s1=s1, commits_dim=commits,
                      run_dir=str(tmp_path / "bat"), resume=False,
-                     partition_batches=3)
+                     granularity=granularity, partition_batches=3)
     assert {tuple(r) for r in a.verdicts.collect()} == {
         tuple(r) for r in b.verdicts.collect()
     }
@@ -172,7 +174,7 @@ def test_partition_batches_equivalent(spark, snapshots, tmp_path):
     assert all(done for _, done in state.values())
     va = spark.read.parquet(str(tmp_path / "one" / "violations"))
     vb = spark.read.parquet(str(tmp_path / "bat" / "violations"))
-    key = ["check_name", "repo", "path", "commit", "content_sha"]
+    key = ["family", "check_name", "repo", "path", "commit", "content_sha"]
     assert {tuple(r) for r in va.select(*key).collect()} == {
         tuple(r) for r in vb.select(*key).collect()
     }
@@ -261,37 +263,38 @@ def test_resume_refuses_rewritten_input_files(spark, snapshots, tmp_path):
                      commits_dim=commits, run_dir=rd, resume=True)
 
 
-def test_precount_off_forces_sequential_actions(
-    spark, snapshots, tmp_path, monkeypatch
-):
-    """ADVICE r5 env-combination hazard: RAQC_RUN_PRECOUNT=0 with the
-    default RAQC_RUN_OVERLAP=1 must NOT overlap write/collect over a cold
-    cache (the measured 229s-vs-174s double-compute mode) — overlap is
-    gated on the pre-count actually having run, not just on cache=True."""
+def test_lane_overlap_follows_cache(spark, snapshots, tmp_path, monkeypatch):
+    """A lane overlaps its write and collect only over a filled cache: two
+    concurrent actions over an unfilled one each compute the scan (the
+    measured 229s-vs-174s double-compute mode). So overlap is exactly
+    ``cache``, in both granularities, and the lanes are one per family or
+    one for the whole contract."""
     import raqc_spark.runner as runner_mod
 
     s1, s2, commits = snapshots
-    seen: list[bool] = []
-    real = runner_mod._run_batched
+    seen: list[tuple[int, bool]] = []
+    real = runner_mod._run_lane
 
-    def spy(work, run_dir, manifest, overlap=True):
-        seen.append(overlap)
-        return real(work, run_dir, manifest, overlap=overlap)
+    def spy(work, run_dir, manifest, partition_batches, all_pids, overlap):
+        seen.append((len(work), overlap))
+        return real(work, run_dir, manifest, partition_batches, all_pids,
+                    overlap)
 
-    monkeypatch.setattr(runner_mod, "_run_batched", spy)
-
-    monkeypatch.setenv("RAQC_RUN_PRECOUNT", "0")
-    monkeypatch.setenv("RAQC_RUN_OVERLAP", "1")
-    run_contract(spark, default_contract(), s2, s1=s1, commits_dim=commits,
-                 run_dir=str(tmp_path / "nopc"), resume=False, cache=True,
-                 granularity="run")
-    assert seen == [False], "cold cache must run sequential actions"
-
-    monkeypatch.setenv("RAQC_RUN_PRECOUNT", "1")
-    run_contract(spark, default_contract(), s2, s1=s1, commits_dim=commits,
-                 run_dir=str(tmp_path / "pc"), resume=False, cache=True,
-                 granularity="run")
-    assert seen == [False, True], "pre-counted cache keeps the overlap win"
+    monkeypatch.setattr(runner_mod, "_run_lane", spy)
+    for granularity in ("family", "run"):
+        for cache in (False, True):
+            seen.clear()
+            res = run_contract(
+                spark, default_contract(), s2, s1=s1, commits_dim=commits,
+                run_dir=str(tmp_path / f"{granularity}_{cache}"),
+                resume=False, cache=cache, granularity=granularity,
+            )
+            n_families = len(res.families_run)
+            lanes = (
+                [(n_families, cache)] if granularity == "run"
+                else [(1, cache)] * n_families
+            )
+            assert sorted(seen) == lanes, (granularity, cache, seen)
 
 
 def _codegen_compiles(spark) -> int:
