@@ -10,58 +10,31 @@ unions of per-check selections cost nothing.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from raqc_spark.contract import Check
 
-_OPS = {"le": "__le__", "ge": "__ge__", "lt": "__lt__", "gt": "__gt__", "eq": "__eq__"}
-
-
-def threshold_pass_col(check: Check, metric: Column) -> Column:
-    """metric OP threshold as a Column predicate (NULL metric → pass=false)."""
-    op = _OPS[check.threshold.op]
-    return F.coalesce(
-        getattr(metric, op)(F.lit(float(check.threshold.value))), F.lit(False)
-    )
-
 
 def verdicts_from_partition_agg(
-    agg: DataFrame,
-    check: Check,
-    metric: Column | str,
-    n_violations: Column | str | None = None,
+    agg: DataFrame, check: Check, metric: str, n_violations: str = "0"
 ) -> DataFrame:
     """Project one check's verdict rows out of a shared per-partition agg.
 
     ``agg`` must carry ``partition_id`` and ``n_rows``; ``metric`` and
-    ``n_violations`` are expressions over its columns — as Columns, or as
-    SQL text (the fast path: a single ``selectExpr`` round-trip instead of
-    ~25 py4j Column calls; py4j latency was measured to dominate the
+    ``n_violations`` are SQL expressions over its columns, built in a single
+    ``selectExpr`` round-trip (py4j latency was measured to dominate the
     contract build — see checks/stats.py module docs). Metrics are rounded
     to 9 decimals so verdicts are bit-identical across parallelism levels
-    (SURVEY.md §7.3.2 determinism under local[8] vs local[32]).
+    (SURVEY.md §7.3.2 determinism under local[8] vs local[32]); a NULL
+    metric fails.
     """
-    if isinstance(metric, str):
-        m = f"round(CAST(({metric}) AS double), 9)"
-        nv = n_violations if isinstance(n_violations, str) else "0"
-        return agg.selectExpr(
-            "CAST(partition_id AS int) AS partition_id",
-            f"'{check.name}' AS check_name",
-            f"coalesce({check.threshold.sql(m)}, false) AS pass",
-            f"{m} AS metric_value",
-            f"CAST({float(check.threshold.value)!r} AS double) AS threshold",
-            "CAST(n_rows AS bigint) AS n_rows",
-            f"CAST({nv} AS bigint) AS n_violations",
-        )
-    metric = F.round(metric.cast("double"), 9)
-    nv = (n_violations if n_violations is not None else F.lit(0)).cast("long")
-    return agg.select(
-        F.col("partition_id").cast("int").alias("partition_id"),
-        F.lit(check.name).alias("check_name"),
-        threshold_pass_col(check, metric).alias("pass"),
-        metric.alias("metric_value"),
-        F.lit(float(check.threshold.value)).alias("threshold"),
-        F.col("n_rows").cast("long").alias("n_rows"),
-        nv.alias("n_violations"),
+    m = f"round(CAST(({metric}) AS double), 9)"
+    return agg.selectExpr(
+        "CAST(partition_id AS int) AS partition_id",
+        f"'{check.name}' AS check_name",
+        f"coalesce({check.threshold.sql(m)}, false) AS pass",
+        f"{m} AS metric_value",
+        f"CAST({float(check.threshold.value)!r} AS double) AS threshold",
+        "CAST(n_rows AS bigint) AS n_rows",
+        f"CAST({n_violations} AS bigint) AS n_violations",
     )

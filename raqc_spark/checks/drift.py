@@ -19,6 +19,8 @@ Scale notes:
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -29,19 +31,20 @@ from raqc_spark.results import VIOLATION_COLS
 PSI_EPS = 1e-6  # smoothing for empty categories, pinned in the contract
 
 
-def bucket_col(
-    col: Column, lo: float | Column, hi: float | Column, num_bins: int
-) -> Column:
-    """Deterministic fixed-width bucket index in [0, num_bins-1].
+def bucket_sql(value: str, lo: str, hi: str, num_bins: int) -> str:
+    """Deterministic fixed-width bucket index in [0, num_bins-1], as SQL text.
 
     Explicit floor arithmetic (not width_bucket) so the identical formula
     runs on any ANSI engine — the DuckDB oracle uses the same expression.
-    ``lo``/``hi`` may be Columns (in-plan derived edges, drift_ks)."""
-    lo_c = lo if isinstance(lo, Column) else F.lit(float(lo))
-    hi_c = hi if isinstance(hi, Column) else F.lit(float(hi))
-    width = (hi_c - lo_c) / F.lit(num_bins)
-    raw = F.floor((col.cast("double") - lo_c) / width)
-    return F.least(F.greatest(raw, F.lit(0)), F.lit(num_bins - 1)).cast("int")
+    ``lo``/``hi`` are SQL expressions (literals, or in-plan derived edges)."""
+    width = f"(({hi}) - ({lo})) / {num_bins}"
+    raw = f"floor((CAST({value} AS double) - ({lo})) / ({width}))"
+    return f"CAST(least(greatest({raw}, 0), {num_bins - 1}) AS int)"
+
+
+def bucket_col(col: str, lo: float, hi: float, num_bins: int) -> Column:
+    """``bucket_sql`` as a Column, for a named column and pinned edges."""
+    return F.expr(bucket_sql(col, f"{float(lo)!r}D", f"{float(hi)!r}D", num_bins))
 
 
 # ---------------------------------------------------------------- alignment
@@ -72,36 +75,18 @@ def align_snapshots(
 # ------------------------------------------------------------------- drift
 
 
-def _safe_frac(cnt: str, tot: str) -> Column:
-    """cnt/tot with 0/0 defined as 0 (snapshot side empty for a partition)."""
-    return F.when(F.col(tot) == 0, F.lit(0.0)).otherwise(
-        F.col(cnt) / F.col(tot)
-    )
-
-
 def _safe_frac_sql(cnt: str, tot: str) -> str:
-    """SQL-text twin of _safe_frac (same CASE expression Catalyst sees)."""
+    """cnt/tot with 0/0 defined as 0 (snapshot side empty for a partition)."""
     return f"CASE WHEN {tot} = 0 THEN 0.0D ELSE {cnt} / {tot} END"
 
 
-def bucket_sql(value: str, lo: str, hi: str, num_bins: int) -> str:
-    """SQL-text twin of bucket_col — identical float arithmetic, so binned
-    verdicts are bit-identical between the Column and SQL-text paths."""
-    width = f"(({hi}) - ({lo})) / {num_bins}"
-    raw = f"floor((CAST({value} AS double) - ({lo})) / ({width}))"
-    return f"CAST(least(greatest({raw}, 0), {num_bins - 1}) AS int)"
-
-
-def _cat_counts(df: DataFrame, column: str) -> DataFrame:
-    val = F.coalesce(F.col(column).cast("string"), F.lit("<null>")).alias("val")
-    return df.groupBy("partition_id", val).agg(F.count(F.lit(1)).alias("cnt"))
-
-
 def _psi_from_cells(cells: DataFrame, check: Check) -> DataFrame:
-    """PSI table from per-(partition, val) cnt1/cnt2 cells — the shared math
-    tail of drift_psi and compile_drift_pass (bit-identical by construction:
-    same integer counts through the same float expressions). SQL-text build
-    (see checks/stats.py module docs on py4j round-trip cost)."""
+    """PSI table from per-(partition, val) cnt1/cnt2 cells.
+
+    PSI = Σ_cat (p − q) · ln(p / q), with ε-smoothed proportions. Exact
+    integer counts feed the float math, so results are order-independent.
+    SQL-text build (see checks/stats.py module docs on py4j round-trip
+    cost)."""
     cells = cells.selectExpr(
         "*",
         "sum(cnt1) OVER (PARTITION BY partition_id) AS tot1",
@@ -120,108 +105,10 @@ def _psi_from_cells(cells: DataFrame, check: Check) -> DataFrame:
     )
 
 
-def drift_psi(
-    s1: DataFrame, s2: DataFrame, check: Check
-) -> tuple[DataFrame, DataFrame]:
-    """Population Stability Index per partition on a categorical column.
-
-    PSI = Σ_cat (p − q) · ln(p / q), with ε-smoothed proportions. Exact
-    integer counts feed the float math, so results are order-independent.
-    Returns (verdicts, per-partition psi table for reports).
-    """
-    c1 = _cat_counts(s1, check.column).withColumnRenamed("cnt", "cnt1")
-    c2 = _cat_counts(s2, check.column).withColumnRenamed("cnt", "cnt2")
-    cells = c1.join(c2, ["partition_id", "val"], "full_outer").fillna(
-        0, subset=["cnt1", "cnt2"]
-    )
-    psi = _psi_from_cells(cells, check)
-    verdicts = verdicts_from_partition_agg(psi, check, F.col("psi"))
-    return verdicts, psi
-
-
-def binned_ecdf(
-    df: DataFrame,
-    value: Column,
-    lo: float | Column,
-    hi: float | Column,
-    num_bins: int,
-    cnt_name: str,
-) -> DataFrame:
-    b = bucket_col(value, lo, hi, num_bins).alias("bucket")
-    return (
-        df.filter(value.isNotNull())
-        .groupBy("partition_id", b)
-        .agg(F.count(F.lit(1)).alias(cnt_name))
-    )
-
-
-def drift_ks(
-    s1: DataFrame,
-    s2: DataFrame,
-    check: Check,
-    lo: float | None = None,
-    hi: float | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Binned-ECDF Kolmogorov-Smirnov per partition (SURVEY.md §2.5 W3).
-
-    D = max_b |F1(b) − F2(b)| over deterministic fixed bins. Bin edges come
-    from params, or — when the contract doesn't pin them — from s1's global
-    min/max derived IN-PLAN: the 1-row (lo, hi) aggregate is broadcast-
-    cross-joined onto both row streams, so the whole check stays one lazy
-    DAG with no driver round-trip (the round-1/2 eager driver-collect
-    fallback cost an extra scan per un-pinned check; VERDICT r2 task 6). At
-    100 TB the pre-agg is still a column-pruned scan — pin (lo, hi) in the
-    contract to skip it entirely.
-    """
-    column, p = check.column, check.p
-    num_bins = int(p.get("num_bins", 64))
-    value = F.col(column)
-    if p.get("log_scale"):
-        # log-spaced bins: right resolution for heavy-tailed lengths, and the
-        # contract can pin (lo, hi) without any data-dependent pre-scan
-        value = F.log1p(value.cast("double"))
-    if lo is None:
-        lo = p.get("lo")
-    if hi is None:
-        hi = p.get("hi")
-    lo_c: float | Column
-    hi_c: float | Column
-    if lo is None or hi is None:
-        mm = F.broadcast(
-            s1.agg(
-                F.min(value).cast("double").alias("_ks_lo"),
-                F.max(value).cast("double").alias("_ks_hi"),
-            )
-        )
-        s1 = s1.crossJoin(mm)
-        s2 = s2.crossJoin(mm)
-        lo_c = F.col("_ks_lo") if lo is None else F.lit(float(lo))
-        hi_raw = F.col("_ks_hi") if hi is None else F.lit(float(hi))
-        # degenerate range (all-equal values, or empty s1 -> NULLs): widen to
-        # one unit so the bucket width is never 0/NULL, matching the float
-        # path's `hi = lo + 1.0` guard
-        lo_c = F.coalesce(lo_c, F.lit(0.0))
-        hi_raw = F.coalesce(hi_raw, F.lit(1.0))
-        hi_c = F.when(hi_raw <= lo_c, lo_c + F.lit(1.0)).otherwise(hi_raw)
-    else:
-        lo_f, hi_f = float(lo), float(hi)
-        if hi_f <= lo_f:
-            hi_f = lo_f + 1.0
-        lo_c, hi_c = lo_f, hi_f
-
-    e1 = binned_ecdf(s1, value, lo_c, hi_c, num_bins, "cnt1")
-    e2 = binned_ecdf(s2, value, lo_c, hi_c, num_bins, "cnt2")
-    cells = e1.join(e2, ["partition_id", "bucket"], "full_outer").fillna(
-        0, subset=["cnt1", "cnt2"]
-    )
-    ks = _ks_from_cells(cells, check)
-    verdicts = verdicts_from_partition_agg(ks, check, F.col("ks"))
-    return verdicts, ks
-
-
 def _ks_from_cells(cells: DataFrame, check: Check) -> DataFrame:
-    """KS table from per-(partition, bucket) cnt1/cnt2 cells — the shared
-    math tail of drift_ks and compile_drift_pass."""
+    """Binned-ECDF KS table from per-(partition, bucket) cnt1/cnt2 cells:
+    D = max_b |F1(b) − F2(b)| over deterministic fixed bins (SURVEY.md §2.5
+    W3)."""
     wcum = ("PARTITION BY partition_id ORDER BY bucket "
             "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW")
     cells = cells.selectExpr(
@@ -240,29 +127,30 @@ def _ks_from_cells(cells: DataFrame, check: Check) -> DataFrame:
     )
 
 
-def compile_drift_pass(
-    s1: DataFrame,
-    s2: DataFrame,
-    checks: list[Check],
-    pool: list | None = None,
-) -> DataFrame:
+def _drift_tables(
+    s1: DataFrame, s2: DataFrame, checks: list[Check]
+) -> list[tuple[Check, DataFrame, str]]:
     """Every drift check (PSI + KS) in ONE shared scan of each snapshot
     (VERDICT r2 task 1: the per-check families cost 4 groupBy exchanges +
     2 full-outer joins per snapshot pair — a large slice of the per-run
-    AQE job floor).
+    AQE job floor). Returns ``(check, per-partition table, metric column)``
+    per check; the table carries ``partition_id``, ``psi``|``ks`` and
+    ``n_rows``.
 
     Plan: union the two snapshots with a side tag, compute ONE
     ``groupBy(partition_id, dim_1, …, dim_k)`` counting rows per side
     (map-side combined — the shuffle carries at most
     Π|dims| × partitions rows, e.g. langs × length-buckets × partitions,
     independent of input size), then derive each check's (partition, dim)
-    marginal from the tiny persisted cube and reuse the exact per-check
-    math (``_psi_from_cells`` / ``_ks_from_cells``) — verdicts are
-    bit-identical to the standalone functions because the same integer
-    marginals feed the same float expressions.
+    marginal from the tiny cube and run the per-check math
+    (``_psi_from_cells`` / ``_ks_from_cells``).
 
-    KS checks without pinned (lo, hi) derive edges in-plan from s1's
-    min/max, broadcast-cross-joined onto the union before bucketing.
+    KS bin edges come from the check's ``lo``/``hi`` params, or — when the
+    contract doesn't pin them — from s1's global min/max derived IN-PLAN:
+    the 1-row aggregate is broadcast-cross-joined onto the union before
+    bucketing, so the check stays one lazy DAG with no driver round-trip
+    (VERDICT r2 task 6). At 100 TB that pre-agg is still a column-pruned
+    scan — pin (lo, hi) in the contract to skip it entirely.
     """
     cols = sorted({c.column for c in checks})
     sides = [
@@ -303,6 +191,8 @@ def compile_drift_pass(
                     f"coalesce(_hi_{c.name}, 1.0D)"
                     if hi is None else f"{float(hi)!r}D"
                 )
+                # degenerate range (all-equal values, or an empty s1's NULLs):
+                # widen to one unit so the bucket width is never 0 or NULL
                 hi_c = (f"CASE WHEN {hi_raw} <= {lo_c} THEN {lo_c} + 1.0D"
                         f" ELSE {hi_raw} END")
             else:
@@ -310,8 +200,8 @@ def compile_drift_pass(
                 if hi_f <= lo_f:
                     hi_f = lo_f + 1.0
                 lo_c, hi_c = f"{lo_f!r}D", f"{hi_f!r}D"
-            # NULL value -> NULL bucket (filtered out of this check's
-            # marginal below), matching binned_ecdf's isNotNull pre-filter.
+            # NULL value -> NULL bucket, filtered out of this check's
+            # marginal below: NULLs are not part of either ECDF.
             # The CASE mask is REQUIRED: Spark's least/greatest skip NULLs,
             # so bucket_sql alone would clamp a NULL value into bucket 0.
             expr = (f"CASE WHEN {value} IS NOT NULL THEN "
@@ -332,8 +222,8 @@ def compile_drift_pass(
     # verdict aggs all plan WITHOUT exchanges (zero extra AQE stage jobs),
     # and the one cube exchange below is canonically identical across the k
     # verdict branches — AQE reuses it instead of recomputing the pair scan.
-    # (pool/persist would add table-cache stage jobs per consumer — measured
-    # net-negative on the job floor; the pool param stays for API symmetry.)
+    # (persist would add table-cache stage jobs per consumer — measured
+    # net-negative on the job floor.)
     # GUARD (ADVICE r3): coalesce(1) is only safe when every PSI dim is
     # low-cardinality — a drift_psi on a near-unique column (e.g. path)
     # makes the cube ~input-cardinality and the single coalesced task
@@ -347,7 +237,7 @@ def compile_drift_pass(
     ):
         cube = cube.coalesce(1)
 
-    verdict_parts = []
+    tables = []
     for c, dim in metas:
         marginal = cube
         if c.kind == "drift_ks":
@@ -357,16 +247,31 @@ def compile_drift_pass(
             "partition_id", F.expr(f"{dim} AS {alias}")
         ).agg(F.expr("sum(cnt1) AS cnt1"), F.expr("sum(cnt2) AS cnt2"))
         if c.kind == "drift_psi":
-            table = _psi_from_cells(cc, c)
-            metric = "psi"
+            tables.append((c, _psi_from_cells(cc, c), "psi"))
         else:
-            table = _ks_from_cells(cc, c)
-            metric = "ks"
-        verdict_parts.append(verdicts_from_partition_agg(table, c, metric))
-    out = verdict_parts[0]
-    for v in verdict_parts[1:]:
-        out = out.unionByName(v)
-    return out
+            tables.append((c, _ks_from_cells(cc, c), "ks"))
+    return tables
+
+
+def compile_drift_pass(
+    s1: DataFrame, s2: DataFrame, checks: list[Check]
+) -> DataFrame:
+    """The drift family's verdicts: every check of ``_drift_tables``' one
+    cube, as one union of per-check verdict rows."""
+    parts = [
+        verdicts_from_partition_agg(table, c, metric)
+        for c, table, metric in _drift_tables(s1, s2, checks)
+    ]
+    return reduce(DataFrame.unionByName, parts)
+
+
+def drift_check(
+    s1: DataFrame, s2: DataFrame, check: Check
+) -> tuple[DataFrame, DataFrame]:
+    """One drift check (``drift_psi`` or ``drift_ks``) through the same pass
+    the contract runs. Returns (verdicts, per-partition psi|ks table)."""
+    [(_, table, metric)] = _drift_tables(s1, s2, [check])
+    return verdicts_from_partition_agg(table, check, metric), table
 
 
 # --------------------------------------------------------------- histograms
@@ -387,8 +292,8 @@ def hist2d(
     return (
         df.filter(F.col(xcol).isNotNull() & F.col(ycol).isNotNull())
         .groupBy(
-            bucket_col(F.col(xcol), xlo, xhi, xbins).alias("bx"),
-            bucket_col(F.col(ycol), ylo, yhi, ybins).alias("by"),
+            bucket_col(xcol, xlo, xhi, xbins).alias("bx"),
+            bucket_col(ycol, ylo, yhi, ybins).alias("by"),
         )
         .agg(F.count(F.lit(1)).alias("cnt"))
     )

@@ -2,7 +2,7 @@
 vectorized-UDF cross-check of the binned-ECDF KS (SURVEY.md §2.10: grouped
 map is the one place Arrow-batched pandas is allowed; never row-at-a-time).
 
-The binned KS (checks.drift.drift_ks) is the contractual, scale-safe
+The binned KS (checks.drift.drift_check) is the contractual, scale-safe
 definition; this exact version exists to bound the binning error in tests
 and for small-partition forensics. Each partition's values must fit one
 executor's memory — fine for verdict-sized groups, NOT the 100 TB path.

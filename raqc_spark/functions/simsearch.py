@@ -3,10 +3,9 @@
 - Brute-force cosine top-k: broadcast the (small) query set against the
   corpus; dot products via zip_with + aggregate (JVM higher-order fns —
   deterministic left-to-right fold in double precision).
-- IVF (ivf_cosine_topk): by default the probes x members scoring runs as a
-  cogrouped ``applyInPandas`` numpy GEMM, so the workers need numpy, pandas
-  and pyarrow. ``RAQC_SIMSEARCH_ARROW=0`` (or ``arrow=False``) selects the
-  JVM path, which scores pairs with the zip_with fold and no Python.
+- IVF (ivf_cosine_topk): the probes x members scoring runs as a cogrouped
+  ``applyInPandas`` numpy GEMM, so the workers need numpy, pandas and
+  pyarrow (as do checks.ks_exact and the mapInPandas media queries).
 - LSH-bucketed variant (scale path): sign-random-projection buckets from
   deterministic pseudo-random hyperplanes; candidates only join within a
   bucket, so cost tracks bucket occupancy instead of n².
@@ -16,8 +15,6 @@ stable across engines/parallelism.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -118,20 +115,6 @@ def sign_bits(vec: Column, num_planes: int) -> Column:
     )
 
 
-def lsh_bucket(
-    emb: DataFrame,
-    num_planes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Sign-random-projection bucket id per vector (one long): the AND-
-    construction over all planes (use banded lsh_cosine_topk for retrieval)."""
-    bits = sign_bits(F.col(vec_col), num_planes)
-    return emb.select(
-        F.col(id_col).alias("doc"), F.xxhash64(bits).alias("bucket")
-    )
-
-
 def lsh_candidates(
     emb: DataFrame,
     num_planes: int = 16,
@@ -223,36 +206,19 @@ def ivf_ranked_assignments(
     return centroids, ranked
 
 
-def ivf_assignments(
-    emb: DataFrame,
-    num_centroids: int = 16,
-    nprobe: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple[DataFrame, DataFrame]:
-    """Round-2 API: (centroids, assignments at rank ≤ nprobe) — a thin view
-    over ivf_ranked_assignments for callers that need one assignment set."""
-    centroids, ranked = ivf_ranked_assignments(
-        emb, num_centroids, max_rank=nprobe, id_col=id_col, vec_col=vec_col
-    )
-    return centroids, ranked.select("doc", "cid")
-
-
 def _ivf_group_topk(k: int, id_dtype):
-    """Per-(list, sub-list) scorer for the Arrow path of ivf_cosine_topk:
-    one BLAS matrix multiply replaces |probes|x|members| interpreted
-    per-pair dot folds (guide §4.2 — batches to vectorized native code).
+    """Per-(list, sub-list) scorer of ivf_cosine_topk: one BLAS matrix
+    multiply over the group's probes x members (guide §4.2 — batches to
+    vectorized native code).
 
-    Emits each probe's local top-k candidates, the same partial reduction
-    the JVM plan's WindowGroupLimit performed, so the global window's result
-    is unchanged. Raw (unrounded) cosines are returned and the JVM rounds
-    them, so output VALUES are Spark-rounded exactly as before. The local
-    cut is a superset: numpy rounds half-even on the binary value while
-    Spark's ``round`` is HALF_UP on the decimal string (5e-7 rounds to 0.0
-    in numpy, to 1e-6 in Spark), so the two keys can differ by one 1e-6
-    step. Every candidate whose numpy key is within one step of the k-th
-    key is kept, and the global window (rounded cosine DESC, c_id ASC)
-    makes the exact cut. Parity with the JVM path is pinned by a test.
+    Emits each probe's local top-k candidates, a partial reduction ahead of
+    the global window. Raw (unrounded) cosines are returned and Spark rounds
+    them with ``F.round``, as cosine_topk does. The local cut is a superset:
+    numpy rounds half-even on the binary value while Spark's ``round`` is
+    HALF_UP on the decimal string (5e-7 rounds to 0.0 in numpy, to 1e-6 in
+    Spark), so the two keys can differ by one 1e-6 step. Every candidate
+    whose numpy key is within one step of the k-th key is kept, and the
+    global window (rounded cosine DESC, c_id ASC) makes the exact cut.
     ``id_dtype`` is the numpy dtype of the ids, for the empty frame."""
     import numpy as np
     import pandas as pd
@@ -297,13 +263,13 @@ def ivf_cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     list_splits: int | None = None,
-    arrow: bool | None = None,
 ) -> DataFrame:
     """IVF ANN: corpus vectors live in ONE inverted list (their nearest
     centroid); queries probe their ``nprobe`` nearest lists; exact cosine
     ranks the candidates. Cost tracks list occupancy (~rows·nprobe/centroids
     candidate pairs), not n². The alternative scale path to lsh_cosine_topk;
-    recall is pinned against exact top-k in tests/test_pipeline_ops.py.
+    recall is pinned against exact top-k in tests/test_pipeline_ops.py, and
+    probing every list reproduces cosine_topk exactly.
 
     The corpus×centroids scoring pass runs ONCE (VERDICT r2 fix): both the
     corpus assignment (rk = 1) and the query probes (rk ≤ nprobe) are
@@ -316,18 +282,15 @@ def ivf_cosine_topk(
     pairs", broadcast that side, and the pair explosion plus every dot
     product ran in ONE task (16.9s at sf0.1 for a 2k-vector corpus). Now
     the join is BY LIST: probes (q_id, cid, q_vec) meet members
-    (c_id, cid, c_vec) on (cid, salt), the dot product is computed at the
-    join output, and the partial WindowGroupLimit prunes to ≤k rows per
-    query inside the same stage — so the only shuffles are linear in
-    corpus×nprobe×vec_size (probe side) and corpus×vec_size (member side),
-    the corpus is NEVER broadcast, and parallelism is num_centroids ×
-    ``list_splits`` (members hash-salted into sub-lists, probes replicated
-    across them — the classic replicated-join split, immune to clustered-
-    list skew). ``list_splits`` defaults to cover the cluster's default
-    parallelism.
+    (c_id, cid, c_vec) in a cogroup on (cid, salt), and each group is
+    scored by one numpy GEMM (``_ivf_group_topk``) that keeps a local top-k
+    per query — so the only shuffles are linear in corpus×nprobe×vec_size
+    (probe side) and corpus×vec_size (member side), the corpus is NEVER
+    broadcast, and parallelism is num_centroids × ``list_splits`` (members
+    hash-salted into sub-lists, probes replicated across them — the classic
+    replicated-join split, immune to clustered-list skew). ``list_splits``
+    defaults to cover the cluster's default parallelism.
     """
-    if arrow is None:
-        arrow = os.environ.get("RAQC_SIMSEARCH_ARROW", "1") != "0"
     _, ranked = ivf_ranked_assignments(
         emb, num_centroids, max_rank=nprobe, id_col=id_col, vec_col=vec_col
     )
@@ -363,8 +326,7 @@ def ivf_cosine_topk(
         )
         # EXPLICIT partition count (REPARTITION_BY_NUM): the members frame is
         # only corpus-rows wide, so AQE's size heuristic coalesces it to ~1
-        # partition — but this is the STREAM side of the list join, and the
-        # probes×members multiply + every dot product runs wherever these
+        # partition — but the probes×members multiply runs wherever these
         # partitions are. The cost is per-OUTPUT-row, invisible to AQE;
         # num_centroids×list_splits tasks ≈ one per (list, sub-list).
         .repartition(num_centroids * list_splits, "cid", "sub")
@@ -377,10 +339,9 @@ def ivf_cosine_topk(
             F.col("vec").alias("q_vec"), F.col("norm").alias("q_norm"),
         )
         .withColumn(
-            # LONG bounds so `sub` is bigint on BOTH sides: the JVM join
-            # coerces int-vs-long keys, but the Arrow cogroup matches groups
-            # by raw partitioning hash, and murmur3(int 2) != murmur3(long 2)
-            # — with an int sub here the two sides never co-partition
+            # LONG bounds so `sub` is bigint on BOTH sides: the cogroup
+            # matches groups by raw partitioning hash, and murmur3(int 2) !=
+            # murmur3(long 2) — with an int sub the sides never co-partition
             "sub",
             F.explode(
                 F.sequence(
@@ -388,54 +349,39 @@ def ivf_cosine_topk(
                 )
             ),
         )
-        # pinned on BOTH sides: whichever side the planner streams (the
-        # other broadcasts), its explicit REPARTITION_BY_NUM survives AQE
-        # coalescing, so the pair multiply never collapses to one task.
+        # pinned on BOTH sides: each side's explicit REPARTITION_BY_NUM
+        # survives AQE coalescing, so the pair multiply never collapses to
+        # one task.
         .repartition(num_centroids * list_splits, "cid", "sub")
     )
-    if arrow:
-        # Arrow GEMM path (guide §4.2): the probes x members multiply is the
-        # ONLY superlinear stage (~rows^2 * nprobe / num_centroids pairs); as
-        # interpreted per-pair JVM folds it measured 89.7s at sf1.0 (150M
-        # pairs x 64 dims), as one per-group numpy matmul + local top-k the
-        # same result computes in ~2s. Grouping keys (cid, sub) match the
-        # pinned REPARTITION_BY_NUM exchanges, so cogroup reuses them and
-        # the fan-out/skew properties of the replicated list join carry over
-        # unchanged.
-        from pyspark.sql.pandas.types import to_arrow_type
+    # GEMM scoring (guide §4.2): the probes x members multiply is the
+    # ONLY superlinear stage (~rows^2 * nprobe / num_centroids pairs); as
+    # interpreted per-pair JVM folds it measured 89.7s at sf1.0 (150M
+    # pairs x 64 dims), as one per-group numpy matmul + local top-k the
+    # same result computes in ~2s. Grouping keys (cid, sub) match the
+    # pinned REPARTITION_BY_NUM exchanges, so cogroup reuses them and
+    # the fan-out/skew properties of the replicated list join carry over
+    # unchanged.
+    from pyspark.sql.pandas.types import to_arrow_type
 
-        # ids keep their input type (string ids included)
-        id_type = emb.schema[id_col].dataType
-        out_schema = StructType([
-            StructField("q_id", id_type),
-            StructField("c_id", id_type),
-            StructField("cosine", DoubleType()),
-        ])
-        local = (
-            probes.groupBy("cid", "sub")
-            .cogroup(members.groupBy("cid", "sub"))
-            .applyInPandas(
-                _ivf_group_topk(k, to_arrow_type(id_type).to_pandas_dtype()),
-                out_schema,
-            )
+    # ids keep their input type (string ids included)
+    id_type = emb.schema[id_col].dataType
+    out_schema = StructType([
+        StructField("q_id", id_type),
+        StructField("c_id", id_type),
+        StructField("cosine", DoubleType()),
+    ])
+    local = (
+        probes.groupBy("cid", "sub")
+        .cogroup(members.groupBy("cid", "sub"))
+        .applyInPandas(
+            _ivf_group_topk(k, to_arrow_type(id_type).to_pandas_dtype()),
+            out_schema,
         )
-        scored = local.select(
-            "q_id", "c_id", F.round(F.col("cosine"), 6).alias("cosine")
-        )
-    else:
-        scored = (
-            probes.join(members, ["cid", "sub"])
-            .filter(F.col("q_id") != F.col("c_id"))
-            .select(
-                "q_id",
-                "c_id",
-                F.round(
-                    _dot(F.col("q_vec"), F.col("c_vec"))
-                    / (F.col("q_norm") * F.col("c_norm")),
-                    6,
-                ).alias("cosine"),
-            )
-        )
+    )
+    scored = local.select(
+        "q_id", "c_id", F.round(F.col("cosine"), 6).alias("cosine")
+    )
     w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
     return (
         scored.withColumn("rk", F.row_number().over(w))

@@ -210,8 +210,7 @@ def compile_plan(
                 tuple(drift_checks),
                 lambda pids=None: (
                     compile_drift_pass(
-                        _pfilter(s1, pids), _pfilter(s2, pids), drift_checks,
-                        pool=pool,
+                        _pfilter(s1, pids), _pfilter(s2, pids), drift_checks
                     ),
                     None,
                 ),

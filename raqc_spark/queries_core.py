@@ -7,7 +7,7 @@ string over the same tables. Conventions for oracle-hash stability:
 - every computed column is aliased identically on both sides;
 - float aggregates are rounded (round-6 for ratios/statistics, round-2 for
   money sums) so engine-order FP noise can't flip the value hash;
-- bucketing uses explicit floor arithmetic (checks.drift.bucket_col) — the
+- bucketing uses explicit floor arithmetic (checks.drift.bucket_sql) — the
   identical formula inlined in the SQL;
 - ordering never matters (driver compare is order-insensitive), but top-k
   SETS are made deterministic by ranking on (rounded metric, key).
@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from raqc_spark.checks.drift import align_snapshots, bucket_col, drift_ks, drift_psi, hist2d
+from raqc_spark.checks.drift import align_snapshots, bucket_col, drift_check, hist2d
 from raqc_spark.contract import Check, Threshold
 from raqc_spark.sources.testdata import load_table
 
@@ -349,7 +349,7 @@ GROUP BY 1, 2
 def q_stats_by_bucket(spark, sf_dir):
     """A2: per-bucket grouped stats (the elevation-band analogue)."""
     o = _t(spark, sf_dir, "orders")
-    b = bucket_col(F.col("o_totalprice"), 0.0, 500_000.0, 10).alias("price_band")
+    b = bucket_col("o_totalprice", 0.0, 500_000.0, 10).alias("price_band")
     return o.groupBy(b).agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.round(F.avg("o_totalprice"), 4).alias("mean_price"),
@@ -377,7 +377,7 @@ def q_drift_psi(spark, sf_dir):
     s2 = e.filter(F.col("ts") >= WEEK_SPLIT)
     chk = Check("psi_event_type", "drift_psi", column="event_type",
                 threshold=Threshold("le", 0.2))
-    _, psi = drift_psi(s1, s2, chk)
+    _, psi = drift_check(s1, s2, chk)
     return psi.select(F.round(F.col("psi"), 6).alias("psi"), F.col("n_rows"))
 
 
@@ -405,8 +405,9 @@ def q_drift_ks(spark, sf_dir):
     s1 = e.filter(F.col("ts") < WEEK_SPLIT)
     s2 = e.filter(F.col("ts") >= WEEK_SPLIT)
     chk = Check("ks_value", "drift_ks", column="value",
-                threshold=Threshold("le", 0.2), params=(("num_bins", 50),))
-    _, ks = drift_ks(s1, s2, chk, lo=0.0, hi=500.0)
+                threshold=Threshold("le", 0.2),
+                params=(("num_bins", 50), ("lo", 0.0), ("hi", 500.0)))
+    _, ks = drift_check(s1, s2, chk)
     return ks.select(F.round(F.col("ks"), 6).alias("ks"), F.col("n_rows"))
 
 

@@ -242,7 +242,7 @@ def q_hist_outlier(spark, sf_dir):
     """RAQC's 2D-histogram outlier cut on driver data: docs in rare
     (lang × n_chars-bucket) cells (raw count < 3) counted per lang."""
     d = load_table(spark, sf_dir, "documents")
-    b = bucket_col(F.col("n_chars"), 0.0, 600.0, 12).alias("len_bucket")
+    b = bucket_col("n_chars", 0.0, 600.0, 12).alias("len_bucket")
     tagged = d.select("doc_id", "lang", b)
     cells = tagged.groupBy("lang", "len_bucket").agg(
         F.count(F.lit(1)).alias("cnt")

@@ -191,10 +191,6 @@ class Manifest:
             out[k] = (v.get("verdicts", []), bool(v.get("complete", True)))
         return out
 
-    def completed(self) -> dict[str, list[dict]]:
-        """Fully-completed families only (round-1 API, kept for callers)."""
-        return {k: rows for k, (rows, done) in self.state().items() if done}
-
 
 def _write_violations(
     violations: DataFrame, out: str, keys: tuple[str, ...] = ("partition_id",)

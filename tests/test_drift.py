@@ -2,9 +2,12 @@
 
 from __future__ import annotations
 
+import dataclasses
+
+import numpy as np
 from pyspark.sql import functions as F
 
-from raqc_spark.checks.drift import align_snapshots, drift_ks, drift_psi
+from raqc_spark.checks.drift import align_snapshots, drift_check
 from raqc_spark.contract import Check, PartitionSpec, Threshold, default_contract
 from raqc_spark.functions import partition_id_col
 from raqc_spark.plan import prepare
@@ -28,7 +31,7 @@ def test_psi_self_is_zero(spark, snapshots):
     s1, _, _ = snapshots
     df = prepare(s1, default_contract())
     chk = Check("psi_lang", "drift_psi", column="lang", threshold=Threshold("le", 0.2))
-    verdicts, _ = drift_psi(df, df, chk)
+    verdicts, _ = drift_check(df, df, chk)
     assert verdicts.filter(F.abs("metric_value") > 1e-9).count() == 0
     assert verdicts.filter("NOT pass").count() == 0
 
@@ -38,7 +41,7 @@ def test_ks_self_is_zero(spark, snapshots):
     df = prepare(s1, default_contract())
     chk = Check("ks_len", "drift_ks", column="content_length",
                 threshold=Threshold("le", 0.15), params=(("num_bins", 64),))
-    verdicts, _ = drift_ks(df, df, chk)
+    verdicts, _ = drift_check(df, df, chk)
     assert verdicts.filter(F.abs("metric_value") > 1e-9).count() == 0
 
 
@@ -58,14 +61,14 @@ def test_drift_fails_only_injected_partitions(spark, snapshots):
     }
 
     chk = Check("psi_lang", "drift_psi", column="lang", threshold=Threshold("le", 0.1))
-    verdicts, _ = drift_psi(d1, d2, chk)
+    verdicts, _ = drift_check(d1, d2, chk)
     failed = {r["partition_id"] for r in verdicts.filter("NOT pass").collect()}
     drifted = {pids[f"repo_{i:04d}"] for i in (7, 8, 9)}
     assert drifted & failed, f"expected drifted partitions {drifted} to fail, got {failed}"
 
     chk2 = Check("ks_len", "drift_ks", column="content_length",
                  threshold=Threshold("le", 0.2), params=(("num_bins", 64),))
-    v2, _ = drift_ks(d1, d2, chk2)
+    v2, _ = drift_check(d1, d2, chk2)
     failed_ks = {r["partition_id"] for r in v2.filter("NOT pass").collect()}
     assert pids["repo_0003"] in failed_ks
 
@@ -128,21 +131,22 @@ def test_drift_ks_inplan_edges_match_pinned(spark, snapshots, contract_df=None):
     """Un-pinned drift_ks derives (lo, hi) in-plan (broadcast 1-row min/max
     cross-join, no driver collect) and must equal the same check with those
     edges pinned as floats."""
-    from pyspark.sql import functions as F
-
     s1, s2, _ = snapshots
     d1 = prepare(s1, default_contract())
     d2 = prepare(s2, default_contract())
     chk_dyn = Check("ks_len", "drift_ks", column="content_length",
                     threshold=Threshold("le", 0.15),
                     params=(("num_bins", 32), ("log_scale", True)))
-    v_dyn = drift_ks(d1, d2, chk_dyn)[0].collect()
+    v_dyn = drift_check(d1, d2, chk_dyn)[0].collect()
     row = d1.agg(
         F.min(F.log1p(F.col("content_length").cast("double"))).alias("lo"),
         F.max(F.log1p(F.col("content_length").cast("double"))).alias("hi"),
     ).collect()[0]
-    v_pin = drift_ks(d1, d2, chk_dyn, lo=float(row["lo"]),
-                     hi=float(row["hi"]))[0].collect()
+    chk_pin = dataclasses.replace(
+        chk_dyn,
+        params=chk_dyn.params + (("lo", float(row["lo"])), ("hi", float(row["hi"]))),
+    )
+    v_pin = drift_check(d1, d2, chk_pin)[0].collect()
     assert sorted(map(tuple, v_dyn)) == sorted(map(tuple, v_pin))
 
 
@@ -156,28 +160,98 @@ def test_no_driver_collect_in_checks_package():
         assert ".collect(" not in f.read_text(), f"driver collect in {f}"
 
 
-def test_compile_drift_pass_matches_standalone_checks(spark, snapshots):
-    """The merged one-cube drift family (VERDICT r2 task 1) must produce
-    bit-identical verdicts to the standalone drift_psi/drift_ks checks —
-    same integer marginals through the same float tails."""
+def _psi_reference(p1, p2, column):
+    """pid -> (PSI, n_rows) from the contract definition: categories are
+    the column's values (NULL is its own category), proportions within the
+    partition plus eps = 1e-6, and a side with no rows has proportions 0."""
+    out = {}
+    for pid in set(p1.partition_id) | set(p2.partition_id):
+        a, b = (
+            p.loc[p.partition_id == pid, column].fillna("<null>").value_counts()
+            for p in (p1, p2)
+        )
+        cats = a.index.union(b.index)
+        c1, c2 = (x.reindex(cats, fill_value=0).to_numpy(float) for x in (a, b))
+        p, q = (
+            (c / c.sum() if c.sum() else np.zeros_like(c)) + 1e-6
+            for c in (c1, c2)
+        )
+        out[pid] = (float(np.sum((p - q) * np.log(p / q))), int(c2.sum()))
+    return out
+
+
+def _ks_reference(p1, p2, column, lo, hi, num_bins):
+    """pid -> (binned-ECDF KS, n_rows): non-null values in fixed-width bins
+    floor((v - lo) / ((hi - lo) / num_bins)) clamped to [0, num_bins - 1],
+    D = max over bins of |F1 - F2|, an empty side's ECDF being 0."""
+    width = (hi - lo) / num_bins
+    p1, p2 = (p[p[column].notna()] for p in (p1, p2))
+    out = {}
+    for pid in set(p1.partition_id) | set(p2.partition_id):
+        n1, n2 = (
+            np.bincount(
+                np.clip(
+                    np.floor((p.loc[p.partition_id == pid, column] - lo) / width),
+                    0, num_bins - 1,
+                ).astype(int),
+                minlength=num_bins,
+            )
+            for p in (p1, p2)
+        )
+        f1, f2 = (
+            np.cumsum(n) / n.sum() if n.sum() else np.zeros(num_bins)
+            for n in (n1, n2)
+        )
+        out[pid] = (float(np.max(np.abs(f1 - f2))), int(n2.sum()))
+    return out
+
+
+def test_drift_pass_matches_pandas_reference(spark, snapshots):
+    """The one-cube drift pass the contract runs agrees with a pandas
+    per-partition PSI and binned-ECDF KS, for pinned and in-plan KS edges:
+    same partitions, metric within 2e-9, exact n_rows, pass == threshold."""
     from raqc_spark.checks.drift import compile_drift_pass
 
     s1, s2, _ = snapshots
     d1 = prepare(s1, default_contract())
     d2 = prepare(s2, default_contract())
-    psi_chk = Check("psi_lang", "drift_psi", column="lang",
-                    threshold=Threshold("le", 0.2))
-    ks_chk = Check("ks_len", "drift_ks", column="content_length",
-                   threshold=Threshold("le", 0.15),
-                   params=(("num_bins", 64), ("lo", 0.0), ("hi", 14.0),
-                           ("log_scale", True)))
-    ks_dyn = Check("ks_len_dyn", "drift_ks", column="content_length",
-                   threshold=Threshold("le", 0.15),
-                   params=(("num_bins", 32), ("log_scale", True)))
-    merged = compile_drift_pass(d1, d2, [psi_chk, ks_chk, ks_dyn]).collect()
-    standalone = (
-        drift_psi(d1, d2, psi_chk)[0].collect()
-        + drift_ks(d1, d2, ks_chk)[0].collect()
-        + drift_ks(d1, d2, ks_dyn)[0].collect()
+    le = Threshold("le", 0.15)
+    checks = [
+        Check("psi_lang", "drift_psi", column="lang",
+              threshold=Threshold("le", 0.2)),
+        Check("ks_log_pinned", "drift_ks", column="content_length",
+              threshold=le, params=(("num_bins", 64), ("lo", 0.0),
+                                    ("hi", 14.0), ("log_scale", True))),
+        Check("ks_log_inplan", "drift_ks", column="content_length",
+              threshold=le, params=(("num_bins", 32), ("log_scale", True))),
+        Check("ks_raw_pinned", "drift_ks", column="content_length",
+              threshold=le, params=(("num_bins", 16), ("lo", 0.0),
+                                    ("hi", 20_000.0))),
+        Check("ks_raw_inplan", "drift_ks", column="content_length",
+              threshold=le, params=(("num_bins", 16),)),
+    ]
+    # log1p comes from Spark so both sides bin the same doubles
+    p1, p2 = (
+        d.selectExpr(
+            "partition_id", "lang", "CAST(content_length AS double) AS raw",
+            "log1p(CAST(content_length AS double)) AS log",
+        ).toPandas()
+        for d in (d1, d2)
     )
-    assert sorted(map(tuple, merged)) == sorted(map(tuple, standalone))
+    rows = compile_drift_pass(d1, d2, checks).collect()
+    for chk in checks:
+        if chk.kind == "drift_psi":
+            ref = _psi_reference(p1, p2, chk.column)
+        else:
+            col = "log" if chk.p.get("log_scale") else "raw"
+            lo, hi = chk.p.get("lo"), chk.p.get("hi")
+            if lo is None:
+                lo, hi = p1[col].min(), p1[col].max()
+            ref = _ks_reference(p1, p2, col, lo, hi, chk.p["num_bins"])
+        got = {r.partition_id: r for r in rows if r.check_name == chk.name}
+        assert set(got) == set(ref), chk.name
+        for pid, (metric, n_rows) in ref.items():
+            r = got[pid]
+            assert abs(r.metric_value - metric) < 2e-9, (chk.name, pid, r, metric)
+            assert r.n_rows == n_rows, (chk.name, pid, r, n_rows)
+            assert r["pass"] == chk.threshold.passes(r.metric_value)

@@ -151,24 +151,21 @@ def test_ivf_ann_recall_on_clustered_data(spark):
     assert recall >= 0.9, f"IVF recall {recall:.3f} < 0.9 on clustered data"
 
 
-def test_ivf_arrow_path_matches_jvm_path(spark):
-    """The Arrow GEMM scorer and the JVM fold path return the same rows
-    (ids, Spark-rounded cosines and ranks) on the clustered data."""
+def test_ivf_exhaustive_probe_matches_brute_force(spark):
+    """Probing every inverted list makes IVF exact: the GEMM scorer returns
+    the same rows (ids, Spark-rounded cosines and ranks) as the
+    oracle-checked brute-force cosine_topk on the clustered data."""
     from raqc_spark.functions.simsearch import ivf_cosine_topk
 
     df = _clustered_embeddings(spark)
-
-    def rows(arrow):
-        q = ivf_cosine_topk(df, k=3, num_centroids=16, nprobe=4, arrow=arrow)
-        return {tuple(r) for r in q.collect()}
-
-    arrow_rows = rows(True)
-    assert len(arrow_rows) == 480 * 3
-    assert arrow_rows == rows(False)
+    q = ivf_cosine_topk(df, k=3, num_centroids=16, nprobe=16)
+    ivf_rows = {tuple(r) for r in q.collect()}
+    assert len(ivf_rows) == 480 * 3
+    assert ivf_rows == {tuple(r) for r in cosine_topk(df, df, k=3).collect()}
 
 
 def test_ivf_string_ids_keep_their_type(spark):
-    """String ids flow through the Arrow scorer as strings and give the
+    """String ids flow through the GEMM scorer as strings and give the
     same neighbours as the integer-id run mapped through the same ids.
     Probing every list makes the search exact, so the centroids (chosen by
     id hash, which differs between the two id types) do not matter; the
@@ -178,7 +175,7 @@ def test_ivf_string_ids_keep_their_type(spark):
     from raqc_spark.functions.simsearch import ivf_cosine_topk
 
     name = "v{:04d}".format
-    kw = dict(k=3, num_centroids=8, nprobe=8, arrow=True)
+    kw = dict(k=3, num_centroids=8, nprobe=8)
     by_int = ivf_cosine_topk(_clustered_embeddings(spark), **kw)
     by_str = ivf_cosine_topk(_clustered_embeddings(spark, name), **kw)
     assert by_str.schema["q_id"].dataType == StringType()

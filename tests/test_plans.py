@@ -72,6 +72,23 @@ def test_ci_grep_no_row_udfs_in_engine_source():
     assert not bad, f"row-at-a-time Python UDFs found: {bad}"
 
 
+def test_ci_grep_no_env_switches_in_engine_source():
+    """Engine behaviour is set by arguments and Spark conf, not env vars:
+    the only environment read under raqc_spark/ is the host's core count
+    for the local master (SPARK_GRAFT_CPUS in session.py)."""
+    uses = re.compile(r"\benviron\b|\bgetenv\b")
+    keyed = re.compile(
+        r"(?:environ(?:\.get)?\s*[(\[]|getenv\s*\()\s*[\"']([^\"']+)[\"']"
+    )
+    found = set()
+    for p in ENGINE_DIR.rglob("*.py"):
+        for line in p.read_text().splitlines():
+            if uses.search(line):
+                keys = keyed.findall(line) or ["<no literal key>"]
+                found |= {(p.name, k) for k in keys}
+    assert found == {("session.py", "SPARK_GRAFT_CPUS")}, found
+
+
 def test_stats_pass_is_single_shared_aggregation(spark, snapshots):
     """The fused stats pass produces ONE Exchange over partition_id for the
     shared agg (not one scan per check)."""

@@ -31,17 +31,29 @@ def test_threshold_python_semantics(metric, value, op):
 
 
 @given(
-    st.floats(min_value=-1e6, max_value=2e6, allow_nan=False),
+    st.lists(st.floats(min_value=-1e6, max_value=2e6), max_size=16),
     st.integers(min_value=1, max_value=256),
+    st.floats(min_value=-1e5, max_value=1e5),
+    st.floats(min_value=1e-3, max_value=1e6),
 )
-@settings(max_examples=200)
-def test_bucket_formula_clamps(x, nb):
-    """The python twin of checks.drift.bucket_col: always in [0, nb-1]."""
-    lo, hi = 0.0, 1e6
+@settings(max_examples=10, deadline=None)
+def test_bucket_formula_clamps(spark, xs, nb, lo, span):
+    """checks.drift.bucket_col, evaluated by Spark, equals its python twin
+    and stays in [0, nb-1] — on drawn values plus every exact bin edge,
+    the float just below lo, hi, and the float just above hi."""
+    from raqc_spark.checks.drift import bucket_col
+
+    hi = lo + span
     width = (hi - lo) / nb
-    raw = math.floor((x - lo) / width)
-    b = min(max(raw, 0), nb - 1)
-    assert 0 <= b <= nb - 1
+    probes = xs + [lo + i * width for i in range(nb + 1)] + [
+        math.nextafter(lo, -math.inf), hi, math.nextafter(hi, math.inf),
+    ]
+    df = spark.createDataFrame(list(enumerate(probes)), "i int, x double")
+    got = dict(df.select("i", bucket_col("x", lo, hi, nb)).collect())
+    for i, x in enumerate(probes):
+        b = min(max(math.floor((x - lo) / width), 0), nb - 1)
+        assert got[i] == b, (x, lo, hi, nb, got[i], b)
+        assert 0 <= b <= nb - 1
 
 
 def test_fixture_generator_is_deterministic():

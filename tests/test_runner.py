@@ -97,12 +97,14 @@ def test_run_granularity_matches_family_granularity(spark, snapshots, tmp_path):
     va = {tuple(r) for r in a.verdicts.collect()}
     vb = {tuple(r) for r in b.verdicts.collect()}
     assert va == vb
-    ma = Manifest(str(tmp_path / "fam")).completed()
-    mb = Manifest(str(tmp_path / "run")).completed()
+    ma = Manifest(str(tmp_path / "fam")).state()
+    mb = Manifest(str(tmp_path / "run")).state()
     assert set(ma) == set(mb)
     for fam in ma:
-        ka = {(r["partition_id"], r["check_name"]) for r in ma[fam]}
-        kb = {(r["partition_id"], r["check_name"]) for r in mb[fam]}
+        (ra, done_a), (rb, done_b) = ma[fam], mb[fam]
+        assert done_a and done_b, fam
+        ka = {(r["partition_id"], r["check_name"]) for r in ra}
+        kb = {(r["partition_id"], r["check_name"]) for r in rb}
         assert ka == kb
     # and a family-wise resume over the run-granularity manifest skips all
     c = run_contract(spark, default_contract(), s2, s1=s1, commits_dim=commits,

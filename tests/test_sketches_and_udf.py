@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from raqc_spark.checks.drift import drift_ks, hist2d, smooth_hist2d
+from raqc_spark.checks.drift import drift_check, hist2d, smooth_hist2d
 from raqc_spark.checks.ks_exact import ks_exact_by_partition
 from raqc_spark.checks.sketches import salted_approx_distinct, salted_counts
 from raqc_spark.contract import Check, Threshold, default_contract
@@ -57,7 +57,7 @@ def test_binned_ks_tracks_exact_ks(spark, snapshots):
                 threshold=Threshold("le", 0.2),
                 params=(("num_bins", 128), ("lo", 0.0), ("hi", 14.0),
                         ("log_scale", True)))
-    _, binned = drift_ks(d1, d2, chk)
+    _, binned = drift_check(d1, d2, chk)
     exact = ks_exact_by_partition(d1, d2, "content_length")
     j = {r["partition_id"]: (r["ks"], None) for r in binned.collect()}
     for r in exact.collect():
