@@ -19,14 +19,15 @@ Scale notes:
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from raqc_spark.checks.blocks import verdicts_from_partition_agg
+from raqc_spark.checks.blocks import (
+    union_all,
+    verdicts_from_partition_agg,
+    violation_rows,
+)
 from raqc_spark.contract import Check
-from raqc_spark.results import VIOLATION_COLS
 
 PSI_EPS = 1e-6  # smoothing for empty categories, pinned in the contract
 
@@ -80,7 +81,7 @@ def _safe_frac_sql(cnt: str, tot: str) -> str:
     return f"CASE WHEN {tot} = 0 THEN 0.0D ELSE {cnt} / {tot} END"
 
 
-def _psi_from_cells(cells: DataFrame, check: Check) -> DataFrame:
+def _psi_from_cells(cells: DataFrame) -> DataFrame:
     """PSI table from per-(partition, val) cnt1/cnt2 cells.
 
     PSI = Σ_cat (p − q) · ln(p / q), with ε-smoothed proportions. Exact
@@ -105,7 +106,7 @@ def _psi_from_cells(cells: DataFrame, check: Check) -> DataFrame:
     )
 
 
-def _ks_from_cells(cells: DataFrame, check: Check) -> DataFrame:
+def _ks_from_cells(cells: DataFrame) -> DataFrame:
     """Binned-ECDF KS table from per-(partition, bucket) cnt1/cnt2 cells:
     D = max_b |F1(b) − F2(b)| over deterministic fixed bins (SURVEY.md §2.5
     W3)."""
@@ -247,9 +248,9 @@ def _drift_tables(
             "partition_id", F.expr(f"{dim} AS {alias}")
         ).agg(F.expr("sum(cnt1) AS cnt1"), F.expr("sum(cnt2) AS cnt2"))
         if c.kind == "drift_psi":
-            tables.append((c, _psi_from_cells(cc, c), "psi"))
+            tables.append((c, _psi_from_cells(cc), "psi"))
         else:
-            tables.append((c, _ks_from_cells(cc, c), "ks"))
+            tables.append((c, _ks_from_cells(cc), "ks"))
     return tables
 
 
@@ -258,11 +259,10 @@ def compile_drift_pass(
 ) -> DataFrame:
     """The drift family's verdicts: every check of ``_drift_tables``' one
     cube, as one union of per-check verdict rows."""
-    parts = [
-        verdicts_from_partition_agg(table, c, metric)
+    return union_all([
+        verdicts_from_partition_agg(table, [(c, metric, "0")])
         for c, table, metric in _drift_tables(s1, s2, checks)
-    ]
-    return reduce(DataFrame.unionByName, parts)
+    ])
 
 
 def drift_check(
@@ -271,7 +271,7 @@ def drift_check(
     """One drift check (``drift_psi`` or ``drift_ks``) through the same pass
     the contract runs. Returns (verdicts, per-partition psi|ks table)."""
     [(_, table, metric)] = _drift_tables(s1, s2, [check])
-    return verdicts_from_partition_agg(table, check, metric), table
+    return verdicts_from_partition_agg(table, [(check, metric, "0")]), table
 
 
 # --------------------------------------------------------------- histograms
@@ -408,16 +408,12 @@ def hist2d_outlier_check(
     flagged = tagged.join(
         F.broadcast(rare), ["lang_cell", "len_bucket"], "left_semi"
     )
-    violations = flagged.selectExpr(
-        "CAST(partition_id AS int) AS partition_id",
-        f"'{check.name}' AS check_name",
-        "repo",
-        "path",
-        "commit",
+    violations = violation_rows(
+        flagged,
+        f"'{check.name}'",
         "format_string('rare hist cell (%s, bucket %d)', lang_cell,"
-        " len_bucket) AS violation_detail",
-        "content_sha",
-    ).select(*VIOLATION_COLS)
+        " len_bucket)",
+    )
 
     # verdicts entirely from the tiny scored cells — no row-level join
     agg = scored.groupBy("partition_id").agg(
@@ -425,6 +421,6 @@ def hist2d_outlier_check(
         F.expr("sum(CASE WHEN _rare THEN cnt ELSE 0 END) AS n_viol"),
     )
     verdicts = verdicts_from_partition_agg(
-        agg, check, "n_viol / n_rows", "n_viol"
+        agg, [(check, "n_viol / n_rows", "n_viol")]
     )
     return verdicts, violations

@@ -11,9 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from raqc_spark.checks.blocks import verdicts_from_partition_agg
+from raqc_spark.checks.blocks import verdicts_from_partition_agg, violation_rows
 from raqc_spark.contract import Check
-from raqc_spark.results import VIOLATION_COLS
 
 
 def ref_integrity_check(
@@ -22,16 +21,12 @@ def ref_integrity_check(
     keys = list(check.p.get("keys", ("repo", "commit")))
     dim_keys = F.broadcast(dim.select(*keys).dropDuplicates(keys))
 
-    violations = df.join(dim_keys, keys, "left_anti").selectExpr(
-        "CAST(partition_id AS int) AS partition_id",
-        f"'{check.name}' AS check_name",
-        "repo",
-        "path",
-        "commit",
+    violations = violation_rows(
+        df.join(dim_keys, keys, "left_anti"),
+        f"'{check.name}'",
         f"format_string('orphan %s not in dim', concat_ws(':',"
-        f" {', '.join(keys)})) AS violation_detail",
-        "content_sha",
-    ).select(*VIOLATION_COLS)
+        f" {', '.join(keys)}))",
+    )
 
     marked = dim_keys.withColumn("_hit", F.lit(1))
     agg = (
@@ -43,6 +38,6 @@ def ref_integrity_check(
         )
     )
     verdicts = verdicts_from_partition_agg(
-        agg, check, "n_viol / n_rows", "n_viol"
+        agg, [(check, "n_viol / n_rows", "n_viol")]
     )
     return verdicts, violations

@@ -29,8 +29,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from raqc_spark.checks.blocks import (
+    union_all,
+    verdicts_from_partition_agg,
+    violation_rows,
+)
 from raqc_spark.contract import Check
-from raqc_spark.results import VIOLATION_COLS
 
 APPROX_PERCENTILE_ACCURACY = 10_000
 
@@ -197,27 +201,6 @@ def _metric_sql(check: Check) -> str:
     raise ValueError(check.kind)
 
 
-def _verdict_struct_sql(check: Check) -> str:
-    """One named_struct(...) verdict slot for the inline-unpivot projection.
-
-    The metric text appears twice (pass predicate + value) — Catalyst
-    subexpression elimination collapses the duplicates, and the projection
-    runs over one row per partition anyway. NULL metric → pass=false,
-    matching Threshold semantics.
-    """
-    metric = f"round(CAST(({_metric_sql(check)}) AS double), 9)"
-    thr = float(check.threshold.value)
-    nv = f"v_{check.name}" if check.kind in PREDICATE_KINDS else "0"
-    return (
-        "named_struct("
-        f"'check_name', '{check.name}', "
-        f"'pass', coalesce({check.threshold.sql(metric)}, false), "
-        f"'metric_value', {metric}, "
-        f"'threshold', CAST({thr!r} AS double), "
-        f"'n_violations', CAST({nv} AS bigint))"
-    )
-
-
 def compile_stats_pass(
     df: DataFrame, checks: list[Check]
 ) -> tuple[DataFrame, DataFrame | None]:
@@ -253,23 +236,17 @@ def compile_stats_pass(
         exprs.extend(_agg_sql(c))
     agg = agg_in.groupBy("partition_id").agg(*[F.expr(e) for e in exprs])
 
-    # Unpivot every check's verdict out of the ONE agg row per partition via
-    # inline(array(named_struct...)) — a single projection, so the
-    # scan+shuffle run exactly once no matter how many checks the contract
-    # carries.
-    verdicts = None
+    # Unpivot every check's verdict out of the ONE agg row per partition — a
+    # single projection, so the scan+shuffle run exactly once no matter how
+    # many checks the contract carries.
+    parts = []
     if fused:
-        slots = ", ".join(_verdict_struct_sql(c) for c in fused)
-        verdicts = agg.selectExpr(
-            "CAST(partition_id AS int) AS partition_id",
-            "CAST(n_rows AS bigint) AS n_rows",
-            f"inline(array({slots}))",
-        ).select(
-            "partition_id", "check_name", "pass", "metric_value", "threshold",
-            "n_rows", "n_violations",
-        )
+        parts.append(verdicts_from_partition_agg(agg, [
+            (c, _metric_sql(c),
+             f"v_{c.name}" if c.kind in PREDICATE_KINDS else "0")
+            for c in fused
+        ]))
     if salted:
-        from raqc_spark.checks.blocks import verdicts_from_partition_agg
         from raqc_spark.checks.sketches import salted_approx_distinct
 
         nrows_pp = agg.select("partition_id", "n_rows")
@@ -280,8 +257,10 @@ def compile_stats_pass(
                 salt_on=c.p.get("salt_on"),
             )
             tbl = sad.join(nrows_pp, "partition_id")
-            v = verdicts_from_partition_agg(tbl, c, "approx_distinct")
-            verdicts = v if verdicts is None else verdicts.unionByName(v)
+            parts.append(
+                verdicts_from_partition_agg(tbl, [(c, "approx_distinct", "0")])
+            )
+    verdicts = union_all(parts)
 
     # Violations for ALL predicate checks in ONE scan (VERDICT r2 task 1:
     # the per-check union ran one filter branch — one AQE stage job — per
@@ -299,19 +278,13 @@ def compile_stats_pass(
             f"'{c.column}', {check_detail(c)}, '{c.kind}')) END"
             for c in pred_checks
         )
-        violations = df.selectExpr(
-            "CAST(partition_id AS int) AS partition_id",
-            "repo", "path", "commit", "content_sha",
-            f"explode(filter(array({slots}), x -> x IS NOT NULL)) AS _v",
-        ).select(
-            "partition_id",
-            F.col("_v.check_name").alias("check_name"),
-            "repo",
-            "path",
-            "commit",
-            F.col("_v.violation_detail").alias("violation_detail"),
-            "content_sha",
-        ).select(*VIOLATION_COLS)
+        violations = violation_rows(
+            df.selectExpr(
+                "*", f"explode(filter(array({slots}), x -> x IS NOT NULL)) AS _v"
+            ),
+            "_v.check_name",
+            "_v.violation_detail",
+        )
     return verdicts, violations
 
 

@@ -22,9 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from raqc_spark.checks.blocks import verdicts_from_partition_agg
+from raqc_spark.checks.blocks import verdicts_from_partition_agg, violation_rows
 from raqc_spark.contract import Check
-from raqc_spark.results import VIOLATION_COLS
 
 
 def uniqueness_check(
@@ -96,16 +95,11 @@ def uniqueness_check(
         f"row_number() OVER (PARTITION BY {', '.join(keys)}"
         " ORDER BY content_sha, lang)"
     )
-    violations = dup_rows.selectExpr(
-        "CAST(partition_id AS int) AS partition_id",
-        f"'{check.name}' AS check_name",
-        "repo",
-        "path",
-        "commit",
-        f"format_string('duplicate key rank=%d', {rank})"
-        " AS violation_detail",
-        "content_sha",
-    ).select(*VIOLATION_COLS)
+    violations = violation_rows(
+        dup_rows,
+        f"'{check.name}'",
+        f"format_string('duplicate key rank=%d', {rank})",
+    )
 
     # per-partition verdict: duplicate-row rate from two TINY per-partition
     # counts joined on partition_id — no join back onto the fact table (the
@@ -129,6 +123,6 @@ def uniqueness_check(
         0, subset=["n_viol"]
     )
     verdicts = verdicts_from_partition_agg(
-        agg, check, "n_viol / n_rows", "n_viol"
+        agg, [(check, "n_viol / n_rows", "n_viol")]
     )
     return verdicts, violations

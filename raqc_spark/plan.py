@@ -20,13 +20,13 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from raqc_spark.checks.blocks import verdicts_from_partition_agg
 from raqc_spark.checks.drift import compile_drift_pass, hist2d_outlier_check
 from raqc_spark.checks.integrity import ref_integrity_check
 from raqc_spark.checks.stats import STATS_KINDS, compile_stats_pass
 from raqc_spark.checks.uniqueness import uniqueness_check
 from raqc_spark.contract import Check, Contract
 from raqc_spark.functions import with_derived, with_partition_id
-from raqc_spark.results import VERDICT_COLS, VERDICT_SCHEMA
 
 
 def prepare(df: DataFrame, contract: Contract) -> DataFrame:
@@ -41,8 +41,9 @@ def schema_check(
 ) -> DataFrame:
     """Check #0: declared source schema present with string types
     (SURVEY.md §1.2 'schema check is itself check #0'). Global verdict row
-    (partition_id = -1); runs on metadata only — no scan. Takes the RAW
-    source schema (before prepare() drops the content column)."""
+    (partition_id = -1) whose metric and violation count are the number of
+    missing or non-string columns; runs on metadata only — no scan. Takes
+    the RAW source schema (before prepare() drops the content column)."""
     actual = {f.name: f.dataType.simpleString() for f in schema.fields}
     missing = [c for c in contract.schema_columns if c not in actual]
     wrong = [
@@ -50,10 +51,11 @@ def schema_check(
         for c in contract.schema_columns
         if c in actual and actual[c] != "string"
     ]
-    ok = not missing and not wrong
-    detail = 0.0 if ok else float(len(missing) + len(wrong))
-    row = [(-1, check.name, ok, detail, 0.0, 0, int(detail))]
-    return spark.createDataFrame(row, schema=VERDICT_SCHEMA)
+    n_bad = len(missing) + len(wrong)
+    row = spark.createDataFrame(
+        [(-1, 0, n_bad)], "partition_id int, n_rows bigint, n_bad bigint"
+    )
+    return verdicts_from_partition_agg(row, [(check, "n_bad", "n_bad")])
 
 
 def _pfilter(df: DataFrame | None, pids: frozenset[int] | None) -> DataFrame | None:
@@ -219,11 +221,3 @@ def compile_plan(
         )
 
     return families
-
-
-def union_verdicts(parts: list[DataFrame]) -> DataFrame:
-    out = None
-    for p in parts:
-        p = p.select(*VERDICT_COLS)
-        out = p if out is None else out.unionByName(p)
-    return out

@@ -47,22 +47,3 @@ VERDICT_COLS = [f.name for f in VERDICT_SCHEMA.fields]
 # sha2('', 256) — the documented stand-in for NULL content (FIXTURES.md).
 EMPTY_SHA256 = "e3b0c44298fc1c149afbf4c8996fb92427ae41e4649b934ca495991b7852b855"
 
-
-def summarize_verdicts(verdict_rows: list[dict]) -> dict:
-    """Run report (S4: RAQC's stats .txt analogue): per-check rollup of the
-    tiny verdict table — pure Python over already-collected rows."""
-    by_check: dict[str, dict] = {}
-    for r in verdict_rows:
-        c = by_check.setdefault(
-            r["check_name"],
-            {"n_partitions": 0, "n_failing": 0, "n_rows": 0, "n_violations": 0},
-        )
-        c["n_partitions"] += 1
-        c["n_failing"] += 0 if r["pass"] else 1
-        c["n_rows"] += r["n_rows"]
-        c["n_violations"] += r["n_violations"]
-    return {
-        "checks": by_check,
-        "passed": all(v["n_failing"] == 0 for v in by_check.values()),
-        "total_violations": sum(v["n_violations"] for v in by_check.values()),
-    }

@@ -30,7 +30,6 @@ lineage + metrics"):
 
 from __future__ import annotations
 
-import functools
 import hashlib
 import json
 import os
@@ -45,8 +44,9 @@ from urllib.parse import unquote, urlparse
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from raqc_spark.checks.blocks import union_all
 from raqc_spark.contract import Contract
-from raqc_spark.plan import CompiledFamily, compile_plan, prepare, union_verdicts
+from raqc_spark.plan import CompiledFamily, compile_plan, prepare
 from raqc_spark.results import VERDICT_SCHEMA
 
 
@@ -80,13 +80,11 @@ def _file_stamp(uri: str) -> str:
     # inputFiles() returns percent-encoded URIs (space -> %20); decode the
     # path component before stat, else those files silently fall back to the
     # path-only stamp and in-place rewrites go undetected again (ADVICE r3).
-    if uri.startswith("file:"):
-        parsed = urlparse(uri)
-        path = unquote(parsed.path)
-    elif _URI_SCHEME.match(uri):
-        # recognized URI (scheme://...): decode the percent-encoding Spark
-        # applied; os.stat will usually fail for remote schemes and fall
-        # back to the path-only stamp below, which is correct for them
+    if uri.startswith("file:") or _URI_SCHEME.match(uri):
+        # file: or another recognized scheme (scheme://...): decode the
+        # percent-encoding Spark applied; os.stat will usually fail for
+        # remote schemes and fall back to the path-only stamp below, which
+        # is correct for them
         path = unquote(urlparse(uri).path)
     else:
         # bare filesystem path: leave untouched — a literal '%2b' in a
@@ -261,11 +259,12 @@ def _run_lane(
 
         def _write() -> None:
             if viol_parts:
-                union = functools.reduce(lambda a, b: a.unionByName(b), viol_parts)
-                _write_violations(union, out, keys=("family", "partition_id"))
+                _write_violations(
+                    union_all(viol_parts), out, keys=("family", "partition_id")
+                )
 
         def _collect() -> list[dict]:
-            return [r.asDict() for r in union_verdicts(verdict_parts).collect()]
+            return [r.asDict() for r in union_all(verdict_parts).collect()]
 
         if overlap:
             with ThreadPoolExecutor(max_workers=1) as writer:

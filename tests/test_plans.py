@@ -89,6 +89,25 @@ def test_ci_grep_no_env_switches_in_engine_source():
     assert found == {("session.py", "SPARK_GRAFT_CPUS")}, found
 
 
+def test_ci_grep_result_row_format_only_in_blocks():
+    """Verdict and violation rows are written by checks/blocks.py alone: no
+    other check compiler, nor the plan or the runner, spells out the row
+    format. (contract.py is left out: its comment quotes the format; the
+    queries_*.py registry builds its own outputs.)"""
+    literals = ("AS check_name", "AS violation_detail", "'threshold'",
+                "round(CAST(")
+    sources = [*(ENGINE_DIR / "checks").glob("*.py"),
+               ENGINE_DIR / "plan.py", ENGINE_DIR / "runner.py"]
+    found = {
+        (p.name, lit)
+        for p in sources if p.name != "blocks.py"
+        for lit in literals if lit in p.read_text()
+    }
+    assert not found, found
+    blocks = (ENGINE_DIR / "checks" / "blocks.py").read_text()
+    assert all(lit in blocks for lit in literals)
+
+
 def test_stats_pass_is_single_shared_aggregation(spark, snapshots):
     """The fused stats pass produces ONE Exchange over partition_id for the
     shared agg (not one scan per check)."""

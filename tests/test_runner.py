@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 import os
+from collections import Counter
 
 import pytest
 
@@ -180,6 +181,91 @@ def test_partition_batches_equivalent(spark, snapshots, tmp_path, granularity):
     assert {tuple(r) for r in va.select(*key).collect()} == {
         tuple(r) for r in vb.select(*key).collect()
     }
+
+
+def _assert_verdicts_match_sink(res):
+    """Every (check_name, partition_id) verdict's n_violations equals that
+    check's sink rows in that partition, and no sink row lacks a verdict.
+    The sink is read with pyarrow, so the count shares no code with the
+    engine."""
+    import pyarrow.dataset as ds
+
+    sink = Counter(
+        (r["check_name"], r["partition_id"])
+        for r in ds.dataset(
+            os.path.join(res.run_dir, "violations"), format="parquet",
+            partitioning="hive",
+        ).to_table(columns=["check_name", "partition_id"]).to_pylist()
+    )
+    verdicts = {
+        (r["check_name"], r["partition_id"]): r["n_violations"]
+        for r in res.verdicts.collect()
+    }
+    assert set(sink) <= set(verdicts), set(sink) - set(verdicts)
+    disagree = {
+        k: (n, sink[k]) for k, n in verdicts.items() if n != sink[k]
+    }
+    assert not disagree, disagree
+    assert sum(sink.values()) > 0  # the fixture injects violations
+
+
+@pytest.mark.parametrize("partition_batches", [1, 4])
+@pytest.mark.parametrize("granularity", ["family", "run"])
+def test_verdicts_agree_with_violation_rows(
+    spark, snapshots, tmp_path, granularity, partition_batches
+):
+    s1, s2, commits = snapshots
+    res = run_contract(spark, default_contract(), s2, s1=s1,
+                       commits_dim=commits, run_dir=str(tmp_path / "agree"),
+                       resume=False, granularity=granularity,
+                       partition_batches=partition_batches)
+    _assert_verdicts_match_sink(res)
+
+
+def test_resumed_verdicts_agree_with_violation_rows(spark, snapshots, tmp_path):
+    """A crash between batch commits leaves the manifest with the first
+    partitions of each family, marked incomplete, and the sink with every
+    partition; the resumed run's verdicts must still match the sink."""
+    s1, s2, commits = snapshots
+    rd = str(tmp_path / "agree_resume")
+
+    def run(resume):
+        return run_contract(spark, default_contract(), s2, s1=s1,
+                            commits_dim=commits, run_dir=rd, resume=resume,
+                            partition_batches=4)
+
+    run(False)
+    mpath = os.path.join(rd, "manifest.json")
+    with open(mpath) as f:
+        data = json.load(f)
+    for fam in data["families"].values():
+        fam["verdicts"] = [r for r in fam["verdicts"] if r["partition_id"] < 4]
+        fam["complete"] = False
+    with open(mpath, "w") as f:
+        json.dump(data, f)
+    res = run(True)
+    assert {4, 5, 6, 7} <= set(res.partitions_resumed["stats"])
+    _assert_verdicts_match_sink(res)
+
+
+def test_schema_check_failure_row(spark, snapshots):
+    """A source missing ``lang`` and carrying a binary ``content`` fails the
+    schema check with one global verdict row counting both columns."""
+    from pyspark.sql import functions as F
+
+    from raqc_spark.contract import Check, Contract
+    from raqc_spark.plan import compile_plan, prepare
+
+    _, s2, _ = snapshots
+    src = s2.drop("lang").withColumn("content", F.col("content").cast("binary"))
+    contract = Contract(checks=(Check("schema", "schema"),))
+    [fam] = compile_plan(spark, contract, prepare(src, contract),
+                         raw_schema=src.schema)
+    verdicts, violations = fam.build()
+    assert violations is None
+    assert [tuple(r) for r in verdicts.collect()] == [
+        (-1, "schema", False, 2.0, 0.0, 0, 2)
+    ]
 
 
 def test_resume_refuses_changed_contract(spark, snapshots, tmp_path):
