@@ -1,14 +1,17 @@
-"""Round-7 optimization measurement harness (bench.py is FROZEN — this file
-holds all extra instrumentation: per-query noop-sink isolation, plan dumps,
-count-vs-noop timing at an arbitrary SF dir).
+"""Per-query measurement harness next to bench.py: plan dumps and
+count-vs-noop timing of named registry queries at any SF dir.
 
 Usage:
-  python bench_extra.py plans  [out_suffix] [sf_dir] [q1 q2 ...]
-  python bench_extra.py time   [sf_dir]     [q1 q2 ...]
+  python bench_extra.py plans  [out_suffix] [sf_dir] [q1 q2 ... | all]
+  python bench_extra.py time   [sf_dir]     [q1 q2 ... | all]
 
-`plans` writes plans/r07/<query>_<suffix>.txt with explain("formatted").
-`time` prints one JSON line: {"sf_dir":..., "queries": {name: {"count": s,
-"noop": s}}} using best-of-3 like the frozen bench.
+Queries default to bench.py's headline set; ``all`` takes every registry
+entry. `plans` writes plans/r07/<query>_<suffix>.txt with
+explain("formatted"). `time` prints one JSON line: {"sf_dir":...,
+"total_s": s, "queries": {name: {"count": s, "noop": s, "procs": [before,
+after]}}}, best-of-3 like bench.py. ``procs`` samples /proc/stat
+procs_running before and after each query's reps: the timing records the
+host's load instead of waiting for it to drop.
 """
 
 from __future__ import annotations
@@ -21,31 +24,29 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
-HEADLINE = [
-    "pricing_summary", "check_col_stats", "check_length_quantiles",
-    "check_uniqueness", "check_ref_integrity", "align_snapshots",
-    "hist2d", "hist_outlier", "drift_psi", "drift_ks", "verdict_rollup",
-    "report_cube", "dedup_minhash_lsh", "dedup_simhash_pairs",
-    "simsearch_cosine_topk", "simsearch_ivf", "text_token_count",
-    "text_quality", "doc_fingerprint", "media_bounds",
-]
+from bench import HEADLINE, _procs_running  # noqa: E402
 
 
 def _spark():
     from raqc_spark.session import get_spark
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    return get_spark("raqc_bench_extra", master=f"local[{cpus}]")
+    return get_spark("raqc_bench_extra")
 
 
-def dump_plans(suffix: str, sf_dir: str, names: list[str]) -> None:
+def _names(args: list[str], queries: dict) -> list[str]:
+    if args == ["all"]:
+        return list(queries)
+    return args or HEADLINE
+
+
+def dump_plans(suffix: str, sf_dir: str, args: list[str]) -> None:
     import __spark_entry__ as entry
 
     spark = _spark()
     queries = entry.queries()
     out_dir = os.path.join(REPO, "plans", "r07")
     os.makedirs(out_dir, exist_ok=True)
-    for name in names:
+    for name in _names(args, queries):
         df = queries[name](spark, sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
@@ -56,17 +57,19 @@ def dump_plans(suffix: str, sf_dir: str, names: list[str]) -> None:
         print(f"wrote {path}")
 
 
-def time_queries(sf_dir: str, names: list[str], reps: int = 3) -> None:
+def time_queries(sf_dir: str, args: list[str], reps: int = 3) -> None:
     import __spark_entry__ as entry
 
     spark = _spark()
     queries = entry.queries()
-    # same warmup as frozen bench
+    # same warmup as bench.py
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     out: dict[str, dict] = {}
-    for name in names:
+    t_all = time.perf_counter()
+    for name in _names(args, queries):
         q = queries[name]
-        spark.sparkContext.setJobDescription(f"r07 {name}")
+        spark.sparkContext.setJobDescription(f"bench_extra {name}")
+        p0 = _procs_running()
         best_c = best_n = None
         for _ in range(reps):
             t0 = time.perf_counter()
@@ -78,10 +81,12 @@ def time_queries(sf_dir: str, names: list[str], reps: int = 3) -> None:
             q(spark, sf_dir).write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0
             best_n = dt if best_n is None else min(best_n, dt)
-        out[name] = {"count": round(best_c, 3), "noop": round(best_n, 3)}
+        out[name] = {"count": round(best_c, 3), "noop": round(best_n, 3),
+                     "procs": [p0, _procs_running()]}
         print(f"# {name}: count={best_c:.3f}s noop={best_n:.3f}s",
               file=sys.stderr)
-    print(json.dumps({"sf_dir": sf_dir, "queries": out}))
+    total = round(time.perf_counter() - t_all, 3)
+    print(json.dumps({"sf_dir": sf_dir, "total_s": total, "queries": out}))
 
 
 if __name__ == "__main__":
@@ -89,9 +94,7 @@ if __name__ == "__main__":
     if mode == "plans":
         suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
         sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1"
-        names = sys.argv[4:] or HEADLINE
-        dump_plans(suffix, sf_dir, names)
+        dump_plans(suffix, sf_dir, sys.argv[4:])
     else:
         sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-        names = sys.argv[3:] or HEADLINE
-        time_queries(sf_dir, names)
+        time_queries(sf_dir, sys.argv[3:])

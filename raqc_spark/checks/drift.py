@@ -13,8 +13,8 @@ Scale notes:
 - KS uses deterministic bin edges, so the statistic is exact w.r.t. the
   binned contract definition and identical at any parallelism
   (SURVEY.md §7.3.1) — no global sort anywhere.
-- Histogram cell tables are tiny → neighbor smoothing is a broadcast
-  self-join, and the rare-cell flag join back to rows is a broadcast too.
+- Histogram cell tables are tiny → neighbor smoothing is a RANGE window
+  over them, and the rare-cell flag join back to rows is a broadcast.
 """
 
 from __future__ import annotations
@@ -297,33 +297,6 @@ def hist2d(
         )
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-
-
-def smooth_hist2d(cells: DataFrame) -> DataFrame:
-    """3×3 moving-window sum over histogram cells — RAQC's mov_wind over
-    histogram space (SURVEY.md §2.5 W2).
-
-    Each cell *donates* its count to its 9 neighbors via a 9-offset explode,
-    then an equi-join groupBy on the neighbor coordinate re-aggregates —
-    O(9·cells) rows through a hash agg, never a nested-loop join. Donated
-    sums at grid edges simply cover fewer source cells (same as numpy's
-    'constant 0' boundary mode)."""
-    offsets = F.expr(
-        "explode(flatten(transform(sequence(-1, 1),"
-        " dx -> transform(sequence(-1, 1), dy -> struct(dx, dy)))))"
-    ).alias("o")
-    donated = cells.select("bx", "by", "cnt", offsets).select(
-        (F.col("bx") + F.col("o.dx")).alias("nbx"),
-        (F.col("by") + F.col("o.dy")).alias("nby"),
-        F.col("cnt").alias("ncnt"),
-    )
-    smoothed = donated.groupBy("nbx", "nby").agg(
-        F.sum("ncnt").alias("smoothed_cnt")
-    )
-    return cells.join(
-        smoothed,
-        (cells.bx == smoothed.nbx) & (cells.by == smoothed.nby),
-    ).select("bx", "by", "cnt", "smoothed_cnt")
 
 
 def hist2d_outlier_check(

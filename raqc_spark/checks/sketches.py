@@ -50,14 +50,3 @@ def salted_approx_distinct(
         F.hll_sketch_estimate(F.hll_union_agg("hll")).alias("approx_distinct")
     )
 
-
-def salted_counts(
-    df: DataFrame, key: str, salt_buckets: int = 16, salt_on: str = "path"
-) -> DataFrame:
-    """Row counts per key via explicit salted two-phase sum (didactic twin
-    of what Catalyst's partial aggregation does implicitly)."""
-    salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(salt_on)), F.lit(salt_buckets)).cast("int")
-    )
-    phase1 = salted.groupBy(key, "_salt").agg(F.count(F.lit(1)).alias("partial"))
-    return phase1.groupBy(key).agg(F.sum("partial").alias("n_rows"))

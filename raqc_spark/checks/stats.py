@@ -7,10 +7,10 @@ map-side-combined) shuffle, after which verdict projection is free.
 
 Check kinds handled here: null_rate, empty_content, bounds, col_stats,
 length_quantiles, approx_distinct (SURVEY.md §2.2 P2/P3, §2.4 A1/A3/A4).
-length_quantiles defaults to BINNED cumulative counts (method="bins") — one
-count_if per log-bin edge in the same codegen agg; method="approx" selects
-percentile_approx (measured to dominate the contract at 10M rows: its
-object-agg QuantileSummaries.compress burned ~90% of executor CPU).
+length_quantiles uses BINNED cumulative counts — one count_if per log-bin
+edge in the same codegen agg. It replaced percentile_approx, which was
+measured to dominate the contract at 10M rows (its object-agg
+QuantileSummaries.compress burned ~90% of executor CPU).
 Row-level violations exist only for the predicate checks (null/empty/bounds);
 quantile/distinct checks are stats-only, like RAQC's basin stats report.
 
@@ -26,7 +26,7 @@ aggregate so the agg schema carries one array column per quantile check.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from raqc_spark.checks.blocks import (
@@ -35,8 +35,6 @@ from raqc_spark.checks.blocks import (
     violation_rows,
 )
 from raqc_spark.contract import Check
-
-APPROX_PERCENTILE_ACCURACY = 10_000
 
 PREDICATE_KINDS = {"null_rate", "empty_content", "bounds", "media_bounds"}
 STATS_KINDS = PREDICATE_KINDS | {"col_stats", "length_quantiles", "approx_distinct"}
@@ -103,10 +101,6 @@ def violation_predicate_sql(check: Check) -> str:
     raise ValueError(f"{check.kind} has no row-level predicate")
 
 
-def violation_predicate(check: Check) -> Column:
-    return F.expr(violation_predicate_sql(check))
-
-
 def _quantile_conf(check: Check) -> tuple[int, float, float, bool, list[float]]:
     p = check.p
     return (
@@ -137,13 +131,7 @@ def _agg_sql(check: Check) -> list[str]:
             f"stddev_samp({c}) AS std_{n}",
         ]
     if check.kind == "length_quantiles":
-        if check.p.get("method", "bins") == "approx":
-            qs = ", ".join(_d(q) for q in check.p.get("qs", (0.5, 0.95, 0.99)))
-            return [
-                f"percentile_approx({c}, array({qs}),"
-                f" {APPROX_PERCENTILE_ACCURACY}) AS q_{n}"
-            ]
-        # Default: binned cumulative counts — one count_if per edge, packed
+        # Binned cumulative counts — one count_if per edge, packed
         # into ONE array aggregate inside the SAME fused codegen hash agg.
         # percentile_approx is a TypedImperativeAggregate whose
         # QuantileSummaries.compress was measured (jstack, 10.6M-row run) to
@@ -192,8 +180,6 @@ def _metric_sql(check: Check) -> str:
         return f"mean_{n}"
     if check.kind == "length_quantiles":
         # verdict on the top quantile
-        if check.p.get("method", "bins") == "approx":
-            return f"element_at(q_{n}, -1)"
         qs = _quantile_conf(check)[4]
         return _bin_quantile_sql(check, qs[-1])
     if check.kind == "approx_distinct":
@@ -228,7 +214,7 @@ def compile_stats_pass(
         if _quantile_conf(c)[3]
         else f"CAST({c.column} AS double) AS _lqv_{c.name}"
         for c in fused
-        if c.kind == "length_quantiles" and c.p.get("method", "bins") == "bins"
+        if c.kind == "length_quantiles"
     ]
     agg_in = df.selectExpr("*", *lqv) if lqv else df
     exprs = ["count(1) AS n_rows"]

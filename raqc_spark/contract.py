@@ -60,7 +60,6 @@ class PartitionSpec:
 
     key: str = "repo"
     num_partitions: int = 8
-    salt_buckets: int = 16  # for two-phase aggs over skewed mega-repos
 
 
 @dataclass(frozen=True)
@@ -99,6 +98,13 @@ class Contract:
             _require_ident(f"check name", c.name)
             if c.column is not None:
                 _require_ident(f"column of check {c.name!r}", c.column)
+            if c.kind == "length_quantiles" and c.p.get("method", "bins") != "bins":
+                # the stats pass computes binned quantiles only
+                # (checks/stats.py): another method must fail, not run bins
+                raise ValueError(
+                    f"length_quantiles check {c.name!r} sets method="
+                    f"{c.p['method']!r}; only 'bins' is supported"
+                )
             keys = c.p.get("keys")
             if keys is not None:
                 for k in keys:
@@ -131,7 +137,6 @@ class Contract:
             "partition_spec": {
                 "key": self.partition_spec.key,
                 "num_partitions": self.partition_spec.num_partitions,
-                "salt_buckets": self.partition_spec.salt_buckets,
             },
             "checks": [
                 {
@@ -172,7 +177,6 @@ class Contract:
             partition_spec=PartitionSpec(
                 key=spec.get("key", "repo"),
                 num_partitions=int(spec.get("num_partitions", 8)),
-                salt_buckets=int(spec.get("salt_buckets", 16)),
             ),
             schema_columns=tuple(
                 d.get(

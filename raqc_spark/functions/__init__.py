@@ -1,7 +1,6 @@
 from raqc_spark.functions.hashing import (
     content_sha_col,
     partition_id_col,
-    salt_col,
     with_derived,
     with_partition_id,
 )
@@ -9,7 +8,6 @@ from raqc_spark.functions.hashing import (
 __all__ = [
     "content_sha_col",
     "partition_id_col",
-    "salt_col",
     "with_derived",
     "with_partition_id",
 ]

@@ -1,4 +1,4 @@
-"""Derived columns: row identity, partition assignment, salting.
+"""Derived columns: row identity and partition assignment.
 
 All pure Column expressions — JVM-side, whole-stage-codegen'd; nothing here
 leaves the Tungsten pipeline. The RAQC analogues are the elementwise
@@ -29,14 +29,6 @@ def partition_id_col(spec: PartitionSpec) -> Column:
     one shuffle it implies is shared by every per-partition check.
     """
     return F.pmod(F.xxhash64(F.col(spec.key)), F.lit(spec.num_partitions)).cast("int")
-
-
-def salt_col(spec: PartitionSpec, col: str = "path") -> Column:
-    """Salt for two-phase aggregation over skewed mega-repos (SURVEY.md §4.3):
-    phase 1 groups by (partition_id, salt) spreading the hot repo over
-    ``salt_buckets`` reducers; phase 2 merges the algebraic partials.
-    """
-    return F.pmod(F.xxhash64(F.col(col)), F.lit(spec.salt_buckets)).cast("int")
 
 
 def with_derived(df: DataFrame, content_col: str = "content") -> DataFrame:

@@ -1,12 +1,10 @@
 from raqc_spark.plans.inspect import (
-    assert_broadcast_join,
     assert_no_row_python,
     assert_pushed_filter,
     explain_formatted,
 )
 
 __all__ = [
-    "assert_broadcast_join",
     "assert_no_row_python",
     "assert_pushed_filter",
     "explain_formatted",

@@ -24,12 +24,6 @@ def assert_pushed_filter(df: DataFrame, column: str) -> None:
         raise AssertionError(f"no pushed filter on {column!r}:\n{plan[:2000]}")
 
 
-def assert_broadcast_join(df: DataFrame) -> None:
-    plan = explain_formatted(df)
-    if "BroadcastHashJoin" not in plan:
-        raise AssertionError(f"expected BroadcastHashJoin:\n{plan[:2000]}")
-
-
 def assert_no_row_python(df: DataFrame) -> None:
     """Arrow-batched pandas stages (ArrowEvalPython / FlatMapGroupsInPandas /
     MapInPandas) are allowed; row-at-a-time BatchEvalPython is not

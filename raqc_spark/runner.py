@@ -128,8 +128,10 @@ class Manifest:
     Thread-safe: families complete concurrently (run_contract pool).
 
     Layout: ``{"meta": {...}, "families": {name: {"verdicts": [...],
-    "complete": bool}}}``. Verdict rows merge by (check_name, partition_id)
-    so batch commits accumulate; ``complete`` marks the family fully done.
+    "empty": [...], "complete": bool}}}``. Verdict rows merge by
+    (check_name, partition_id) so batch commits accumulate; ``empty`` lists
+    the partition_ids a committed chunk covered that produced no verdict row
+    (partitions without rows); ``complete`` marks the family fully done.
     Legacy (round-1) entries without the flag are treated as complete.
     """
 
@@ -161,10 +163,15 @@ class Manifest:
             self._swap(data)
 
     def record(
-        self, family: str, verdict_rows: list[dict], complete: bool
+        self,
+        family: str,
+        verdict_rows: list[dict],
+        complete: bool,
+        empty: frozenset[int] = frozenset(),
     ) -> None:
         """Merge verdict rows into the family entry (keyed by
-        (check_name, partition_id)) and set its complete flag."""
+        (check_name, partition_id)) and ``empty`` into its row-less
+        partition_ids, and set its complete flag."""
         with self._lock:
             data = self.load()
             entry = data["families"].setdefault(
@@ -179,6 +186,7 @@ class Manifest:
             entry["verdicts"] = sorted(
                 merged.values(), key=lambda r: (r["check_name"], r["partition_id"])
             )
+            entry["empty"] = sorted(set(entry.get("empty", [])) | empty)
             entry["complete"] = bool(complete)
             self._swap(data)
 
@@ -188,6 +196,12 @@ class Manifest:
         for k, v in self.load()["families"].items():
             out[k] = (v.get("verdicts", []), bool(v.get("complete", True)))
         return out
+
+    def empty_pids(self) -> dict[str, set[int]]:
+        """family -> partition_ids committed without a verdict row."""
+        return {
+            k: set(v.get("empty", [])) for k, v in self.load()["families"].items()
+        }
 
 
 def _write_violations(
@@ -238,7 +252,10 @@ def _run_lane(
     (partitioned by (family, partition_id) with dynamic overwrite, so other
     families' and other chunks' sinks stay intact) and collects their
     verdicts as ONE union collect, side by side when ``overlap``; then each
-    family's manifest entry is committed. Returns the verdict rows."""
+    family's manifest entry is committed, with the partitions of a
+    splittable family's chunk that produced no verdict row (they hold no
+    rows, and a resume must not list them again). Returns the verdict
+    rows."""
     plans = [
         (fam, _chunks(fam, pids, all_pids, partition_batches))
         for fam, pids in work
@@ -276,7 +293,11 @@ def _run_lane(
             rows = _collect()
         for fam, chunks in step:
             fam_rows = [r for r in rows if owner[r["check_name"]] == fam.name]
-            manifest.record(fam.name, fam_rows, complete=i == len(chunks) - 1)
+            covered = (chunks[i] or all_pids) if fam.splittable else frozenset()
+            empty = covered - {r["partition_id"] for r in fam_rows}
+            manifest.record(
+                fam.name, fam_rows, complete=i == len(chunks) - 1, empty=empty
+            )
         all_rows.extend(rows)
     return all_rows
 
@@ -334,6 +355,7 @@ def run_contract(
         shutil.rmtree(os.path.join(run_dir, "violations"), ignore_errors=True)
     manifest.set_meta(fingerprint=fingerprint)
     state = manifest.state() if resume else {}
+    empty = manifest.empty_pids() if resume else {}
 
     all_pids = frozenset(range(contract.partition_spec.num_partitions))
     s2p = prepare(s2, contract)
@@ -382,6 +404,7 @@ def run_contract(
             skipped.append(fam.name)
         elif rows_done and fam.splittable:
             done_pids = {int(r["partition_id"]) for r in rows_done}
+            done_pids |= empty.get(fam.name, set())
             remaining = frozenset(all_pids - done_pids)
             all_rows.extend(rows_done)
             if remaining:

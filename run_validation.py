@@ -20,7 +20,7 @@ import sys
 
 from pyspark.sql import SparkSession
 
-from raqc_spark.contract import Contract, PartitionSpec, default_contract
+from raqc_spark.contract import Contract, default_contract
 from raqc_spark.runner import run_contract
 from raqc_spark.session import ENGINE_CONF
 from raqc_spark.sources.table_adapter import ParquetSnapshotAdapter
@@ -52,14 +52,8 @@ def main(argv: list[str] | None = None) -> int:
     base = Contract.from_yaml(args.contract) if args.contract else default_contract()
     spec = base.partition_spec
     if args.partitions is not None:
-        spec = PartitionSpec(
-            key=spec.key, num_partitions=args.partitions,
-            salt_buckets=spec.salt_buckets,
-        )
-    contract = Contract(
-        checks=base.checks, partition_spec=spec,
-        schema_columns=base.schema_columns,
-    )
+        spec = dataclasses.replace(spec, num_partitions=args.partitions)
+    contract = dataclasses.replace(base, partition_spec=spec)
 
     adapter = ParquetSnapshotAdapter(args.table)
     s1 = adapter.load_snapshot(spark, args.snapshot1)

@@ -8,10 +8,15 @@ from raqc_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
+    # a 6g heap, not the engine's 48g default: at 48g the suite's JVM grew
+    # to ~11 GB RSS on a 15 GB host and was once lost mid-suite
     s = get_spark(
         "raqc_spark_tests",
         master="local[4]",
-        extra_conf={"spark.sql.shuffle.partitions": "8"},
+        extra_conf={
+            "spark.sql.shuffle.partitions": "8",
+            "spark.driver.memory": "6g",
+        },
     )
     yield s
 

@@ -80,3 +80,34 @@ def test_rows_only_queries_run(spark, name):
     df = QUERIES[name](spark, SF_DIR)
     assert df.count() >= 0
     assert len(df.columns) > 0
+
+
+def test_length_quantiles_approx_matches_nearest_rank_reference(spark):
+    """``check_length_quantiles_approx`` against Spark's documented
+    percentile_approx definition, computed with numpy: the smallest value v
+    with at least ceil(p·n) values <= v (nearest rank). Each lang has 64-218
+    rows, fewer than the accuracy of 10 000, so the sketch keeps every value
+    and must be exact."""
+    from fractions import Fraction
+
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    docs = pq.read_table(
+        f"{SF_DIR}/documents.parquet", columns=["lang", "n_chars"]
+    ).to_pandas()
+    want = {}
+    for lang, g in docs.groupby("lang"):
+        v = np.sort(g["n_chars"].to_numpy())
+        n = len(v)
+        want[lang] = (n,) + tuple(
+            int(v[max(math.ceil(Fraction(q) * n), 1) - 1])
+            for q in ("0.5", "0.95", "0.99")
+        )
+    assert len(want) == 5 and max(w[0] for w in want.values()) < 10_000
+
+    got = {
+        r["lang"]: (r["n_rows"], r["p50"], r["p95"], r["p99"])
+        for r in QUERIES["check_length_quantiles_approx"](spark, SF_DIR).collect()
+    }
+    assert got == want

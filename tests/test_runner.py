@@ -142,7 +142,10 @@ def test_resume_recomputes_only_missing_partitions(spark, snapshots, tmp_path):
         json.dump(data, f)
 
     res = _run(spark, snapshots, rd)
-    assert res.partitions_resumed == {"stats": sorted(set(range(8)) - kept_pids)}
+    # partition 0 of this fixture holds no rows: the fresh run recorded it
+    # as empty, so it counts as done although it has no verdict row
+    assert 0 not in kept_pids
+    assert res.partitions_resumed == {"stats": [4, 5, 6, 7]}
     assert "stats" in res.families_run
     stats_checks = {
         r["check_name"] for r in full.verdicts.collect()
@@ -246,6 +249,62 @@ def test_resumed_verdicts_agree_with_violation_rows(spark, snapshots, tmp_path):
     res = run(True)
     assert {4, 5, 6, 7} <= set(res.partitions_resumed["stats"])
     _assert_verdicts_match_sink(res)
+
+
+def test_resume_counts_partitions_without_rows_as_done(
+    spark, snapshots, tmp_path
+):
+    """A partition with no rows gets no verdict row in any family. The
+    manifest records it as empty, so a resume does not list it again: with
+    partitions < 4 kept, each splittable family resumes exactly 4..7, and
+    with every partition kept no family resumes at all."""
+    from raqc_spark.plan import compile_plan, prepare
+
+    s1, s2, commits = snapshots
+    c = default_contract()
+    splittable = {
+        f.name
+        for f in compile_plan(spark, c, prepare(s2, c), prepare(s1, c),
+                              commits, raw_schema=s2.schema)
+        if f.splittable
+    }
+    rd = str(tmp_path / "empty_pid")
+
+    def run(resume):
+        return run_contract(spark, c, s2, s1=s1, commits_dim=commits,
+                            run_dir=rd, resume=resume, partition_batches=4)
+
+    def crash(keep_below):
+        mpath = os.path.join(rd, "manifest.json")
+        with open(mpath) as f:
+            data = json.load(f)
+        for fam in data["families"].values():
+            fam["verdicts"] = [
+                r for r in fam["verdicts"] if r["partition_id"] < keep_below
+            ]
+            fam["complete"] = False
+        with open(mpath, "w") as f:
+            json.dump(data, f)
+        return {
+            name: {r["partition_id"] for r in fam["verdicts"]}
+            for name, fam in data["families"].items()
+        }
+
+    fresh = run(False)
+    kept = crash(keep_below=8)
+    # the fixture's partition 0 is empty: no family has a verdict row for it
+    assert all(0 not in pids for pids in kept.values())
+
+    res = run(True)
+    assert res.partitions_resumed == {}
+    assert splittable <= set(res.families_skipped)
+    assert {tuple(r) for r in res.verdicts.collect()} == {
+        tuple(r) for r in fresh.verdicts.collect()
+    }
+
+    crash(keep_below=4)
+    res = run(True)
+    assert res.partitions_resumed == {f: [4, 5, 6, 7] for f in splittable}
 
 
 def test_schema_check_failure_row(spark, snapshots):

@@ -6,10 +6,14 @@ from __future__ import annotations
 
 import os
 
+from raqc_spark.session import ENGINE_CONF
+
 
 def test_local_session_defaults(spark):
     conf = spark.sparkContext.getConf()
-    assert conf.get("spark.driver.memory") == "48g"
+    assert ENGINE_CONF["spark.driver.memory"] == "48g"
+    # the test session overrides the heap through extra_conf
+    assert conf.get("spark.driver.memory") == "6g"
     assert conf.get("spark.sql.files.maxPartitionBytes") == "33554432"
     assert conf.get("spark.sql.codegen.cache.maxEntries") == "1024"
     # the test session's extra_conf overrides the engine default of 32
@@ -26,5 +30,5 @@ def test_local_session_defaults(spark):
     # and the driver JVM really started with them
     mx = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
     jvm_args = list(mx.getInputArguments())
-    assert "-Xmx48g" in jvm_args
+    assert "-Xmx6g" in jvm_args
     assert all(f in jvm_args for f in flags), jvm_args

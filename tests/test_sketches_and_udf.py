@@ -5,9 +5,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from raqc_spark.checks.drift import drift_check, hist2d, smooth_hist2d
+from raqc_spark.checks.drift import drift_check, hist2d, hist2d_outlier_check
 from raqc_spark.checks.ks_exact import ks_exact_by_partition
-from raqc_spark.checks.sketches import salted_approx_distinct, salted_counts
+from raqc_spark.checks.sketches import salted_approx_distinct
 from raqc_spark.contract import Check, Threshold, default_contract
 from raqc_spark.plan import prepare
 
@@ -24,17 +24,6 @@ def test_salted_hll_matches_exact_within_5pct(spark, snapshots):
     for r in joined:
         rel = abs(r["approx_distinct"] - r["exact"]) / max(r["exact"], 1)
         assert rel <= 0.05, f"{r['repo']}: {r['approx_distinct']} vs {r['exact']}"
-
-
-def test_salted_counts_equal_direct_groupby(spark, snapshots):
-    _, s2, _ = snapshots
-    df = prepare(s2, default_contract())
-    salted = {r["repo"]: r["n_rows"] for r in salted_counts(df, "repo").collect()}
-    direct = {
-        r["repo"]: r["n"]
-        for r in df.groupBy("repo").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    assert salted == direct
 
 
 def test_approx_percentile_close_to_exact(spark, snapshots):
@@ -75,14 +64,35 @@ def test_exact_ks_plan_uses_arrow_not_row_python(spark, snapshots):
     assert "BatchEvalPython" not in plan  # no row-at-a-time Python
 
 
-def test_smooth_hist2d_neighborhood_sum(spark):
-    cells = spark.createDataFrame(
-        [(0, 0, 10), (0, 1, 5), (1, 0, 2), (5, 5, 7)], ["bx", "by", "cnt"]
+def test_hist2d_smoothing_window_stays_in_lang(spark):
+    """The contract's smoothing: a cell's score sums its own lang's cells
+    within ±1 length bucket (width 10 here). Lang a's one row in bucket 5
+    sits between 20-row cells in buckets 4 and 6, so it is not rare; lang
+    b's one row in bucket 5 has its 20-row cells two buckets away, so it is.
+    A window across langs (a's cells), over ±2 buckets or ±1 cell instead of
+    ±1 bucket (b's cells) would spare b's row; a window of the cell alone
+    would flag a's, as ``smooth=False`` must."""
+    cells = [("a", 45, 20), ("a", 55, 1), ("a", 65, 20),
+             ("b", 35, 20), ("b", 55, 1), ("b", 75, 20)]
+    df = spark.createDataFrame(
+        [
+            (0, "r", f"{lang}/{length}/{i}", "c", lang, length, "sha")
+            for lang, length, n in cells
+            for i in range(n)
+        ],
+        "partition_id int, repo string, path string, commit string,"
+        " lang string, content_length int, content_sha string",
     )
-    got = {(r["bx"], r["by"]): r["smoothed_cnt"] for r in smooth_hist2d(cells).collect()}
-    assert got[(0, 0)] == 17  # self + (0,1) + (1,0)
-    assert got[(5, 5)] == 7  # isolated cell: only itself
-    assert got[(0, 1)] == 17 and got[(1, 0)] == 17
+
+    def flagged(smooth):
+        chk = Check("h", "hist2d_outlier", threshold=Threshold("le", 1.0),
+                    params=(("lo", 0.0), ("hi", 100.0), ("num_bins", 10),
+                            ("min_cell_frac", 0.05), ("smooth", smooth)))
+        _, violations = hist2d_outlier_check(df, chk)
+        return {r["path"] for r in violations.collect()}
+
+    assert flagged(True) == {"b/55/0"}
+    assert flagged(False) == {"a/55/0", "b/55/0"}
 
 
 def test_hist2d_counts(spark):

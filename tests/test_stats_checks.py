@@ -105,14 +105,23 @@ def test_bin_quantile_within_one_bin_of_exact(spark, snapshots):
             assert below < 0.99 * n, (pid, edge_v, below, n)
 
 
-def test_quantile_approx_method_still_available(spark, snapshots):
-    _, s2, _ = snapshots
-    df = prepare(s2, default_contract())
+def test_quantile_approx_method_rejected():
+    """length_quantiles runs binned counts only; a contract asking for
+    method="approx" must fail validation, not silently run bins."""
+    import pytest
+
+    from raqc_spark.contract import Contract
+
     chk = Check("length_quantiles", "length_quantiles",
                 column="content_length", threshold=Threshold("le", 1e9),
                 params=(("method", "approx"),))
-    verdicts, _ = compile_stats_pass(df, [chk])
-    assert verdicts.filter("metric_value IS NOT NULL").count() > 0
+    with pytest.raises(ValueError, match="method='approx'"):
+        Contract(checks=(chk,)).validate()
+    text = Contract(checks=(chk,)).to_yaml()
+    with pytest.raises(ValueError, match="only 'bins' is supported"):
+        Contract.from_yaml(text)
+    Contract(checks=(Check("lq", "length_quantiles", column="content_length",
+                           params=(("method", "bins"),)),)).validate()
 
 
 def test_bin_quantile_all_null_column_yields_null_metric(spark):
