@@ -175,19 +175,12 @@ def run_contract_bench(spark, fixture_root: str, runs: int = 1) -> dict:
     }
 
 
-def _query_times(path: str) -> dict | None:
-    """The per-query dict from one bench artifact, or None if absent."""
-    try:
-        with open(path) as f:
-            doc = json.load(f)
-        return (doc.get("parsed") or doc).get("queries") or None
-    except Exception:
-        return None
-
-
-def _prior_scalar(key: str) -> float | None:
-    """Best (minimum) known prior for a top-level scalar bench metric,
-    min-merged over the same record set as ``_latest_prior_bench``."""
+def _prior_records(cpus: int, sf) -> list[dict]:
+    """Every earlier round's bench record made with this run's ``cpus`` and
+    ``sf``: the driver-written BENCH_r{N}.json (fields from its ``parsed``
+    record over its own) and the committed BENCH/bench_result_r*.json full
+    records. A record from another core count or scale factor is no prior:
+    the 32-core records would flag every 4-core reading as a regression."""
     import glob
     import re as _re
 
@@ -198,23 +191,33 @@ def _prior_scalar(key: str) -> float | None:
         p for p in glob.glob(os.path.join(REPO, "BENCH", "bench_result_r*.json"))
         if _re.search(r"bench_result_r(\d+)\.json$", p)
     ]
-    best: float | None = None
+    records = []
     for path in paths:
         try:
             with open(path) as f:
                 doc = json.load(f)
         except Exception:
             continue
-        v = (doc.get("parsed") or doc).get(key)
-        if isinstance(v, (int, float)) and v > 0 and (best is None or v < best):
-            best = float(v)
-    return best
+        rec = {**doc, **(doc.get("parsed") or {})}
+        if rec.get("cpus") == cpus and rec.get("sf") == sf:
+            records.append(rec)
+    return records
 
 
-def _latest_prior_bench() -> dict | None:
+def _prior_scalar(key: str, cpus: int, sf) -> float | None:
+    """Best (minimum) known prior for a top-level scalar bench metric,
+    min-merged over the same record set as ``_latest_prior_bench``."""
+    vals = [
+        float(v) for v in (r.get(key) for r in _prior_records(cpus, sf))
+        if isinstance(v, (int, float)) and v > 0
+    ]
+    return min(vals, default=None)
+
+
+def _latest_prior_bench(cpus: int, sf) -> dict | None:
     """Best-known per-query prior: the per-query MINIMUM across every
-    usable bench record (driver-written BENCH_r{N}.json AND the committed
-    BENCH/bench_result_r*.json full records).
+    usable bench record of this host size and scale factor
+    (``_prior_records``).
 
     Why min-across-records, not newest record: r5's gate silently skipped
     because the newest prior (BENCH_r04) had ``parsed: {}`` from the r4
@@ -224,22 +227,9 @@ def _latest_prior_bench() -> dict | None:
     agreed on <2.5s — VERDICT r5 "What's wrong" #3). The fastest credible
     prior is the right regression reference; a flag it raises immediately
     self-adjudicates via the in-artifact quiet probe below."""
-    import glob
-    import re as _re
-
-    paths = [
-        p for p in glob.glob(os.path.join(REPO, "BENCH_r*.json"))
-        if _re.search(r"BENCH_r(\d+)\.json$", p)
-    ] + [
-        p for p in glob.glob(os.path.join(REPO, "BENCH", "bench_result_r*.json"))
-        if _re.search(r"bench_result_r(\d+)\.json$", p)
-    ]
     best: dict[str, float] = {}
-    for path in paths:
-        q = _query_times(path)
-        if not q:
-            continue
-        for name, t in q.items():
+    for rec in _prior_records(cpus, sf):
+        for name, t in (rec.get("queries") or {}).items():
             if isinstance(t, (int, float)) and (
                 name not in best or t < best[name]
             ):
@@ -251,6 +241,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    sf = float(sf) if sf.replace(".", "").isdigit() else sf
 
     import __spark_entry__ as entry_mod
     from raqc_spark.session import get_spark
@@ -303,7 +294,7 @@ def main() -> None:
     # headline-query gate didn't cover this metric). Same contract as the
     # per-query probes: >2x the best known prior -> idle-gated probe reps
     # recorded in the artifact, best folded into the metric.
-    prior_b = _prior_scalar("contract_batched4_wall_sec")
+    prior_b = _prior_scalar("contract_batched4_wall_sec", int(cpus), sf)
     if prior_b and batched_wall > 2.0 * prior_b and batched_wall - prior_b > 0.5:
         reps = []
         for _ in range(3):
@@ -355,7 +346,7 @@ def main() -> None:
     # shipped unannotated because the gate was vacuous AND the 5-rep quiet
     # probe lived in a separate committed file).
     regressions: list[dict] = []
-    prior = _latest_prior_bench()
+    prior = _latest_prior_bench(int(cpus), sf)
     if prior:
         for name, t in per_query.items():
             p = prior.get(name)
@@ -388,7 +379,7 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "queries": per_query,
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "sf": sf,
         "cpus": int(cpus),
         "quiet_window": quiet,
         "headline_quiet_window": headline_quiet,

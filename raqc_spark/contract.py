@@ -93,9 +93,16 @@ class Contract:
         for col in self.schema_columns:
             _require_ident("schema_columns entry", col)
         for c in self.checks:
-            if c.kind not in KNOWN_KINDS:
+            if c.kind not in KIND_PARAMS:
                 raise ValueError(f"unknown check kind {c.kind!r} in {c.name!r}")
             _require_ident(f"check name", c.name)
+            unread = set(c.p) - KIND_PARAMS[c.kind]
+            if unread:
+                raise ValueError(
+                    f"{c.kind} check {c.name!r} has unknown params "
+                    f"{sorted(unread)}; {c.kind} reads "
+                    f"{sorted(KIND_PARAMS[c.kind]) or 'none'}"
+                )
             if c.column is not None:
                 _require_ident(f"column of check {c.name!r}", c.column)
             if c.kind == "length_quantiles" and c.p.get("method", "bins") != "bins":
@@ -156,24 +163,30 @@ class Contract:
 
     @classmethod
     def from_dict(cls, d: dict) -> Contract:
-        spec = d.get("partition_spec", {})
-        checks = tuple(
-            Check(
+        _known_keys("contract", d, ("checks", "partition_spec", "schema_columns"))
+        spec = _known_keys(
+            "partition_spec", d.get("partition_spec", {}),
+            ("key", "num_partitions"),
+        )
+        checks = []
+        for c in d["checks"]:
+            _known_keys(
+                "check", c, ("name", "kind", "column", "threshold", "params")
+            )
+            th = _known_keys("threshold", c.get("threshold", {}), ("op", "value"))
+            checks.append(Check(
                 name=c["name"],
                 kind=c["kind"],
                 column=c.get("column"),
                 threshold=Threshold(
-                    c.get("threshold", {}).get("op", "le"),
-                    float(c.get("threshold", {}).get("value", 0.0)),
+                    th.get("op", "le"), float(th.get("value", 0.0))
                 ),
                 params=tuple(
                     (k, _tupled(v)) for k, v in c.get("params", {}).items()
                 ),
-            )
-            for c in d["checks"]
-        )
+            ))
         out = cls(
-            checks=checks,
+            checks=tuple(checks),
             partition_spec=PartitionSpec(
                 key=spec.get("key", "repo"),
                 num_partitions=int(spec.get("num_partitions", 8)),
@@ -207,6 +220,17 @@ class Contract:
         return cls.from_dict(yaml.safe_load(text))
 
 
+def _known_keys(what: str, d: dict, known: tuple[str, ...]) -> dict:
+    """``d`` itself, or ValueError naming the keys it has beyond ``known``:
+    a misspelt key must fail, not silently run the default."""
+    unknown = sorted(set(d) - set(known))
+    if unknown:
+        raise ValueError(
+            f"unknown {what} key(s) {unknown}; expected one of {sorted(known)}"
+        )
+    return d
+
+
 def _tupled(v):
     """YAML lists -> tuples, recursively (frozen-dataclass canonical form)."""
     if isinstance(v, list):
@@ -220,23 +244,30 @@ def _listed(v):
     return v
 
 
-KNOWN_KINDS = frozenset(
-    {
-        "schema",
-        "null_rate",
-        "empty_content",
-        "bounds",
-        "col_stats",
-        "length_quantiles",
-        "approx_distinct",
-        "uniqueness",
-        "ref_integrity",
-        "drift_psi",
-        "drift_ks",
-        "hist2d_outlier",
-        "media_bounds",
-    }
-)
+#: The params each check kind reads, one allow-list per kind (its compiler
+#: in checks/): validate() rejects any other, so a misspelt param fails
+#: instead of silently running the kind's default.
+KIND_PARAMS: dict[str, frozenset[str]] = {
+    "schema": frozenset(),
+    "null_rate": frozenset(),
+    "empty_content": frozenset(),
+    "bounds": frozenset({"lo", "hi"}),
+    "col_stats": frozenset(),
+    "length_quantiles": frozenset(
+        {"num_bins", "lo", "hi", "log_scale", "qs", "method"}
+    ),
+    "approx_distinct": frozenset({"method", "salt_buckets", "salt_on"}),
+    "uniqueness": frozenset({"keys", "max_dup_keys"}),
+    "ref_integrity": frozenset({"keys"}),
+    "drift_psi": frozenset({"categorical"}),
+    "drift_ks": frozenset({"num_bins", "lo", "hi", "log_scale"}),
+    "hist2d_outlier": frozenset(
+        {"num_bins", "lo", "hi", "log_scale", "min_cell_frac", "smooth"}
+    ),
+    "media_bounds": frozenset(
+        {"min_bytes", "max_bytes", "allowed_types", "type_col"}
+    ),
+}
 
 #: media-type literals ("image/png") are embedded as SQL string literals in
 #: the media_bounds predicate; restrict to the MIME charset (no quotes).

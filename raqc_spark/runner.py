@@ -25,7 +25,11 @@ lineage + metrics"):
   for a partially-completed splittable family, recomputes ONLY the missing
   partition_ids (the completed partitions' verdicts are reconstructed from
   the manifest — no recompute, no rescan); a chunk is the unit a crash
-  loses and a resume restarts from.
+  loses and a resume restarts from: the resume reruns the run's own
+  partition batches, intersected with the partitions left to do, so it
+  also reuses the generated classes the fresh run compiled for them;
+- every write, collect and the cache fill runs under a Spark job group
+  (``raqc:<lane's families>:chunk<i>:write|collect``, ``raqc:cache_fill``).
 """
 
 from __future__ import annotations
@@ -38,9 +42,11 @@ import shutil
 import threading
 import uuid
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 from dataclasses import dataclass
 from urllib.parse import unquote, urlparse
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -204,6 +210,27 @@ class Manifest:
         }
 
 
+#: The thread-local properties ``SparkContext.setJobGroup`` sets.
+_JOB_GROUP_PROPS = (
+    "spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"
+)
+
+
+@contextmanager
+def _job_group(group: str):
+    """Run the enclosed actions under Spark job group ``group`` (shown in the
+    Spark UI, queryable with ``statusTracker().getJobIdsForGroup``), then
+    restore the calling thread's own group."""
+    sc = SparkContext.getOrCreate()
+    prior = [(k, sc.getLocalProperty(k)) for k in _JOB_GROUP_PROPS]
+    sc.setJobGroup(group, group)
+    try:
+        yield
+    finally:
+        for k, v in prior:
+            sc.setLocalProperty(k, v)
+
+
 def _write_violations(
     violations: DataFrame, out: str, keys: tuple[str, ...] = ("partition_id",)
 ) -> None:
@@ -227,16 +254,23 @@ def _chunks(
     all_pids: frozenset[int],
     partition_batches: int,
 ) -> list[frozenset[int] | None]:
-    """A family's partition chunks, in order: a splittable family's ``pids``
-    (``None`` = all) cut into ``partition_batches`` batches, anything else
-    one chunk of ``pids`` as given (``None`` keeps the unfiltered plan)."""
+    """A family's partition chunks, in order. A splittable family's batches
+    are cut once from ``all_pids`` into ``partition_batches`` batches, the
+    same cut for a fresh run and every resume; each batch is intersected
+    with ``pids`` (``None`` = all) and the empty ones dropped, so a resume
+    reruns exactly the lost chunks with the pid sets (and so the generated
+    classes) the fresh run used. Anything else is one chunk of ``pids`` as
+    given (``None`` keeps the unfiltered plan)."""
     if not fam.splittable or partition_batches <= 1:
         return [pids]
-    ordered = sorted(pids or all_pids)
+    todo = all_pids if pids is None else pids
+    ordered = sorted(all_pids)
     size = -(-len(ordered) // partition_batches)  # ceil division
-    return [
-        frozenset(ordered[i : i + size]) for i in range(0, len(ordered), size)
-    ]
+    batches = (
+        frozenset(ordered[i : i + size]) & todo
+        for i in range(0, len(ordered), size)
+    )
+    return [b for b in batches if b]
 
 
 def _run_lane(
@@ -255,12 +289,14 @@ def _run_lane(
     family's manifest entry is committed, with the partitions of a
     splittable family's chunk that produced no verdict row (they hold no
     rows, and a resume must not list them again). Returns the verdict
-    rows."""
+    rows. Each write and collect runs under the job group
+    ``raqc:<lane's families>:chunk<i>:write|collect``."""
     plans = [
         (fam, _chunks(fam, pids, all_pids, partition_batches))
         for fam, pids in work
     ]
     owner = {c.name: fam.name for fam, _ in work for c in fam.checks}
+    lane = "+".join(fam.name for fam, _ in work)
     out = os.path.join(run_dir, "violations")
     all_rows: list[dict] = []
     for i in range(max((len(chunks) for _, chunks in plans), default=0)):
@@ -274,14 +310,19 @@ def _run_lane(
                     violations.withColumn("family", F.lit(_safe(fam.name)))
                 )
 
+        group = f"raqc:{lane}:chunk{i}"
+
         def _write() -> None:
             if viol_parts:
-                _write_violations(
-                    union_all(viol_parts), out, keys=("family", "partition_id")
-                )
+                with _job_group(f"{group}:write"):
+                    _write_violations(
+                        union_all(viol_parts), out,
+                        keys=("family", "partition_id"),
+                    )
 
         def _collect() -> list[dict]:
-            return [r.asDict() for r in union_all(verdict_parts).collect()]
+            with _job_group(f"{group}:collect"):
+                return [r.asDict() for r in union_all(verdict_parts).collect()]
 
         if overlap:
             with ThreadPoolExecutor(max_workers=1) as writer:
@@ -332,8 +373,10 @@ def run_contract(
     ``partition_batches`` picks the chunks: each splittable family is split
     into this many partition_id batches (non-splittable ones run whole in
     the first chunk), checkpointing the manifest after each: a crash loses
-    at most one chunk, and the resume recomputes only the partitions with
-    no manifest entry.
+    at most one chunk. The resume reruns the same batches, each
+    intersected with the partitions that have no manifest entry (empty
+    ones dropped), so it runs exactly the lost chunks, with the pid sets,
+    and so the generated classes, of the first pass.
 
     ``resume=False`` starts clean: prior manifest and violation sinks under
     ``run_dir`` are removed (a fresh run must not inherit stale partitions).
@@ -429,7 +472,8 @@ def run_contract(
         # over an unfilled cache each compute the scan (measured 229 s vs
         # 174 s sequential at local[2]), so one count fills it first.
         if cache and work:
-            s2p.count()
+            with _job_group("raqc:cache_fill"):
+                s2p.count()
         lanes = [work] if granularity == "run" else [[w] for w in work]
         with ThreadPoolExecutor(max_workers=max(1, len(lanes))) as pool:
             futures = [

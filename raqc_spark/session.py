@@ -33,8 +33,9 @@ ENGINE_CONF: dict[str, str] = {
     # Whole-stage-codegen class cache (static conf, default 100). One JVM
     # running the contract in both granularities, fresh and resumed, needs
     # ~550 distinct generated classes: batched mode inlines each chunk's
-    # `partition_id IN (...)` literals, so every chunk (and every resumed
-    # single-pid chunk) compiles its own classes. At 100 the cache evicted
+    # `partition_id IN (...)` literals, so every chunk compiles its own
+    # classes (a resume reruns the fresh run's chunks, so it reuses them).
+    # At 100 the cache evicted
     # them between passes and every pass recompiled from scratch (measured
     # at local[4] on the 20k-file fixture: ~590 Janino compiles per
     # batched4 pass and ~190 per run-mode pass, ~28 ms each, and the JIT

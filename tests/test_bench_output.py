@@ -96,28 +96,59 @@ def test_latest_prior_bench_min_merges_usable_records(tmp_path, monkeypatch):
     artifact) must not make the regression gate vacuous, and a polluted
     driver reading (r5's 24.7s cosine_topk vs the committed quiet 0.6s)
     must not set a lenient threshold — the prior is the per-query MIN over
-    every usable record."""
+    every usable record of the same cpus and sf."""
     import bench as bench_mod
 
     monkeypatch.setattr(bench_mod, "REPO", str(tmp_path))
     (tmp_path / "BENCH").mkdir()
+    host = {"cpus": 4, "sf": 0.1}
 
     def write(rel, doc):
         (tmp_path / rel).write_text(json.dumps(doc))
 
     # only unparseable records (r4 failure shape) -> no prior, gate skips
-    write("BENCH_r04.json", {"parsed": {}})
-    assert bench_mod._latest_prior_bench() is None
+    write("BENCH_r04.json", {**host, "parsed": {}})
+    assert bench_mod._latest_prior_bench(4, 0.1) is None
 
     # an older driver record with real queries is found despite r4
-    write("BENCH_r03.json", {"parsed": {"queries": {"q1": 1.5}}})
-    assert bench_mod._latest_prior_bench() == {"q1": 1.5}
+    write("BENCH_r03.json", {**host, "parsed": {"queries": {"q1": 1.5}}})
+    assert bench_mod._latest_prior_bench(4, 0.1) == {"q1": 1.5}
 
     # a polluted newer driver reading does NOT loosen the prior; the
     # committed quiet record's faster number wins per-query
-    write("BENCH_r05.json", {"queries": {"q1": 24.7, "q2": 0.4}})
-    write("BENCH/bench_result_r5.json", {"queries": {"q1": 0.6, "q2": 0.9}})
-    assert bench_mod._latest_prior_bench() == {"q1": 0.6, "q2": 0.4}
+    write("BENCH_r05.json", {**host, "queries": {"q1": 24.7, "q2": 0.4}})
+    write("BENCH/bench_result_r5.json",
+          {**host, "queries": {"q1": 0.6, "q2": 0.9}})
+    assert bench_mod._latest_prior_bench(4, 0.1) == {"q1": 0.6, "q2": 0.4}
+
+
+def test_priors_come_from_the_same_cpus_and_sf(tmp_path, monkeypatch):
+    """A record made on another core count or scale factor is no prior: the
+    32-core records must not flag a 4-core run's readings as regressions.
+    A driver record's top-level cpus/sf count when its parsed record lacks
+    them."""
+    import bench as bench_mod
+
+    monkeypatch.setattr(bench_mod, "REPO", str(tmp_path))
+    (tmp_path / "BENCH").mkdir()
+    (tmp_path / "BENCH_r07.json").write_text(json.dumps({
+        "cpus": 32, "sf": 0.1,
+        "parsed": {"queries": {"q1": 0.2}, "contract_batched4_wall_sec": 10.2},
+    }))
+    (tmp_path / "BENCH" / "bench_result_r7_sf1.json").write_text(json.dumps(
+        {"cpus": 4, "sf": 1.0, "queries": {"q1": 9.0},
+         "contract_batched4_wall_sec": 40.0}
+    ))
+    assert bench_mod._latest_prior_bench(4, 0.1) is None
+    assert bench_mod._prior_scalar("contract_batched4_wall_sec", 4, 0.1) is None
+    assert bench_mod._latest_prior_bench(32, 0.1) == {"q1": 0.2}
+    assert bench_mod._prior_scalar("contract_batched4_wall_sec", 32, 0.1) == 10.2
+    (tmp_path / "BENCH_r08.json").write_text(json.dumps({
+        "cpus": 4, "sf": 0.1,
+        "parsed": {"queries": {"q1": 1.1}, "contract_batched4_wall_sec": 12.0},
+    }))
+    assert bench_mod._latest_prior_bench(4, 0.1) == {"q1": 1.1}
+    assert bench_mod._prior_scalar("contract_batched4_wall_sec", 4, 0.1) == 12.0
 
 
 def test_round_no_env_override(monkeypatch):
@@ -135,11 +166,12 @@ def test_prior_scalar_min_merges_records(tmp_path, monkeypatch):
 
     monkeypatch.setattr(bench_mod, "REPO", str(tmp_path))
     (tmp_path / "BENCH").mkdir()
-    assert bench_mod._prior_scalar("contract_batched4_wall_sec") is None
+    key = "contract_batched4_wall_sec"
+    assert bench_mod._prior_scalar(key, 4, 0.1) is None
     (tmp_path / "BENCH_r05.json").write_text(
-        json.dumps({"parsed": {"contract_batched4_wall_sec": 18.6}})
+        json.dumps({"cpus": 4, "sf": 0.1, "parsed": {key: 18.6}})
     )
     (tmp_path / "BENCH" / "bench_result_r6.json").write_text(
-        json.dumps({"contract_batched4_wall_sec": 45.8})
+        json.dumps({"cpus": 4, "sf": 0.1, key: 45.8})
     )
-    assert bench_mod._prior_scalar("contract_batched4_wall_sec") == 18.6
+    assert bench_mod._prior_scalar(key, 4, 0.1) == 18.6

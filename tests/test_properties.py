@@ -116,6 +116,43 @@ def test_contract_yaml_rejects_unknown_kind():
         Contract.from_yaml(bad)
 
 
+def test_contract_yaml_rejects_misspelt_keys():
+    """A typo at any level of a YAML contract fails, naming the key, instead
+    of silently running the default: the contract, partition_spec, check
+    and threshold keys, and the params a check's kind does not read."""
+    import pytest as _pytest
+
+    from raqc_spark.contract import Contract
+
+    head = "checks:\n- name: q\n  kind: length_quantiles\n  column: c\n"
+    Contract.from_yaml(head + "  params: {num_bins: 16}\n")  # well-formed
+    for text, key in [
+        (head + "partition_spec: {num_partitons: 64}\n", "num_partitons"),
+        (head + "partition_spec: {salt_buckets: 32}\n", "salt_buckets"),
+        (head + "schema_column: [c]\n", "schema_column"),
+        (head + "  colunm: c\n", "colunm"),
+        (head + "  threshold: {op: le, vaule: 1.0}\n", "vaule"),
+        (head + "  params: {num_bin: 16}\n", "num_bin"),
+    ]:
+        with _pytest.raises(ValueError, match=f"'{key}'"):
+            Contract.from_yaml(text)
+
+
+def test_every_kind_rejects_params_it_does_not_read():
+    """validate() checks each check's params against its kind's allow-list
+    (``KIND_PARAMS``): a param another kind reads is still rejected."""
+    import pytest as _pytest
+
+    from raqc_spark.contract import KIND_PARAMS, Check, Contract
+
+    for kind, params in KIND_PARAMS.items():
+        stray = "qs" if kind != "length_quantiles" else "keys"
+        assert stray not in params
+        chk = Check("c", kind, column="content", params=((stray, 1),))
+        with _pytest.raises(ValueError, match=f"unknown params \\['{stray}'\\]"):
+            Contract(checks=(chk,)).validate()
+
+
 def test_bin_quantile_rank_property_random_data(spark):
     """Property (hypothesis-style, seed-pinned loop): for random length
     distributions, the binned p-quantile edge E satisfies the rank

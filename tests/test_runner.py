@@ -225,6 +225,26 @@ def test_verdicts_agree_with_violation_rows(
     _assert_verdicts_match_sink(res)
 
 
+def _crash(run_dir, keep_below):
+    """Keep only the manifest rows of partitions < ``keep_below`` and mark
+    every family incomplete: a crash between batch commits. Returns each
+    family's kept partition_ids."""
+    mpath = os.path.join(run_dir, "manifest.json")
+    with open(mpath) as f:
+        data = json.load(f)
+    for fam in data["families"].values():
+        fam["verdicts"] = [
+            r for r in fam["verdicts"] if r["partition_id"] < keep_below
+        ]
+        fam["complete"] = False
+    with open(mpath, "w") as f:
+        json.dump(data, f)
+    return {
+        name: {r["partition_id"] for r in fam["verdicts"]}
+        for name, fam in data["families"].items()
+    }
+
+
 def test_resumed_verdicts_agree_with_violation_rows(spark, snapshots, tmp_path):
     """A crash between batch commits leaves the manifest with the first
     partitions of each family, marked incomplete, and the sink with every
@@ -238,14 +258,7 @@ def test_resumed_verdicts_agree_with_violation_rows(spark, snapshots, tmp_path):
                             partition_batches=4)
 
     run(False)
-    mpath = os.path.join(rd, "manifest.json")
-    with open(mpath) as f:
-        data = json.load(f)
-    for fam in data["families"].values():
-        fam["verdicts"] = [r for r in fam["verdicts"] if r["partition_id"] < 4]
-        fam["complete"] = False
-    with open(mpath, "w") as f:
-        json.dump(data, f)
+    _crash(rd, keep_below=4)
     res = run(True)
     assert {4, 5, 6, 7} <= set(res.partitions_resumed["stats"])
     _assert_verdicts_match_sink(res)
@@ -274,24 +287,8 @@ def test_resume_counts_partitions_without_rows_as_done(
         return run_contract(spark, c, s2, s1=s1, commits_dim=commits,
                             run_dir=rd, resume=resume, partition_batches=4)
 
-    def crash(keep_below):
-        mpath = os.path.join(rd, "manifest.json")
-        with open(mpath) as f:
-            data = json.load(f)
-        for fam in data["families"].values():
-            fam["verdicts"] = [
-                r for r in fam["verdicts"] if r["partition_id"] < keep_below
-            ]
-            fam["complete"] = False
-        with open(mpath, "w") as f:
-            json.dump(data, f)
-        return {
-            name: {r["partition_id"] for r in fam["verdicts"]}
-            for name, fam in data["families"].items()
-        }
-
     fresh = run(False)
-    kept = crash(keep_below=8)
+    kept = _crash(rd, keep_below=8)
     # the fixture's partition 0 is empty: no family has a verdict row for it
     assert all(0 not in pids for pids in kept.values())
 
@@ -302,7 +299,7 @@ def test_resume_counts_partitions_without_rows_as_done(
         tuple(r) for r in fresh.verdicts.collect()
     }
 
-    crash(keep_below=4)
+    _crash(rd, keep_below=4)
     res = run(True)
     assert res.partitions_resumed == {f: [4, 5, 6, 7] for f in splittable}
 
@@ -482,3 +479,129 @@ def test_repeat_run_reuses_generated_code(
 
     counts = [run(name) for name in ("first", "second", "third")]
     assert min(counts[1:]) <= max_new, counts
+
+
+@pytest.mark.parametrize("granularity", ["family", "run"])
+def test_resume_reruns_the_lost_batches(
+    spark, snapshots, tmp_path, monkeypatch, granularity
+):
+    """A resume cuts the same partition batches as the fresh run and
+    reruns only the lost ones: after a crash that kept partitions < 4 of a
+    partition_batches=4 run, every splittable family resumes as the fresh
+    run's last two chunks, {4, 5} and {6, 7}."""
+    import raqc_spark.runner as runner_mod
+
+    s1, s2, commits = snapshots
+    rd = str(tmp_path / "lost")
+
+    def run(resume):
+        return run_contract(spark, default_contract(), s2, s1=s1,
+                            commits_dim=commits, run_dir=rd, resume=resume,
+                            granularity=granularity, partition_batches=4)
+
+    run(False)
+    _crash(rd, keep_below=4)
+    chunks: dict[str, list] = {}
+    real = runner_mod._chunks
+
+    def spy(fam, pids, all_pids, partition_batches):
+        out = real(fam, pids, all_pids, partition_batches)
+        chunks[fam.name] = out
+        return out
+
+    monkeypatch.setattr(runner_mod, "_chunks", spy)
+    res = run(True)
+    assert res.partitions_resumed, res
+    for name in res.partitions_resumed:
+        assert chunks[name] == [{4, 5}, {6, 7}], (name, chunks[name])
+
+
+def test_chunks_are_the_run_batches_left_to_do():
+    """``_chunks`` cuts a splittable family's batches from all partitions
+    and keeps each batch's pids still to do: {3, 5, 6, 7} of 8 partitions in
+    4 batches is [{3}, {5}, {6, 7}]. Over every subset of the partitions, a
+    resume never runs more chunks than ``partition_batches``, and each chunk
+    lies inside one of the fresh run's chunks."""
+    from itertools import combinations
+
+    from raqc_spark.plan import CompiledFamily
+    from raqc_spark.runner import _chunks
+
+    split = CompiledFamily("f", (), lambda pids=None: None, splittable=True)
+    whole = CompiledFamily("g", (), lambda pids=None: None, splittable=False)
+    all_pids = frozenset(range(8))
+    assert _chunks(split, frozenset({3, 5, 6, 7}), all_pids, 4) == [
+        {3}, {5}, {6, 7}
+    ]
+    assert _chunks(split, None, all_pids, 4) == [
+        {0, 1}, {2, 3}, {4, 5}, {6, 7}
+    ]
+    assert _chunks(split, frozenset({5}), all_pids, 1) == [{5}]
+    assert _chunks(whole, frozenset({3, 5}), all_pids, 4) == [{3, 5}]
+    assert _chunks(whole, None, all_pids, 4) == [None]
+    for batches in range(1, 10):
+        fresh = _chunks(split, all_pids, all_pids, batches)
+        for k in range(1, 9):
+            for todo in map(frozenset, combinations(sorted(all_pids), k)):
+                out = _chunks(split, todo, all_pids, batches)
+                assert len(out) <= batches
+                assert frozenset().union(*out) == todo
+                assert all(any(c <= f for f in fresh) for c in out)
+
+
+def test_resume_reuses_generated_code(spark, snapshots, tmp_path):
+    """A resume after a fresh run in the same session reruns the fresh
+    run's own chunks, so it finds their generated classes in Spark's codegen
+    cache. partition_batches=3 cuts 8 partitions into {0, 1, 2}, {3, 4, 5}
+    and {6, 7}; a crash that kept partitions < 3 leaves the last two. A
+    resume that re-cut {3..7} into three new batches ({3, 4}, {5, 6}, {7})
+    compiled 66 new classes for their ``partition_id IN (...)`` literals;
+    this one compiled 0. The bound leaves room for the 0-16 AQE plan-variant
+    misses of ``test_repeat_run_reuses_generated_code``."""
+    s1, s2, commits = snapshots
+    rd = str(tmp_path / "codegen_resume")
+
+    def run(resume):
+        run_contract(spark, default_contract(), s2, s1=s1,
+                     commits_dim=commits, run_dir=rd, resume=resume,
+                     partition_batches=3)
+
+    run(False)
+    _crash(rd, keep_below=3)
+    before = _codegen_compiles(spark)
+    run(True)
+    assert _codegen_compiles(spark) - before <= 16
+
+
+def test_runner_actions_run_under_job_groups(spark, snapshots, tmp_path):
+    """Every runner action runs under a job group naming its lane's
+    families, chunk and action (``raqc:<families>:chunk<i>:write|collect``),
+    the cache fill under ``raqc:cache_fill``, and the caller's own group is
+    restored afterwards."""
+    from raqc_spark.plan import compile_plan, prepare
+
+    s1, s2, commits = snapshots
+    c = default_contract()
+    families = compile_plan(spark, c, prepare(s2, c), prepare(s1, c), commits,
+                            raw_schema=s2.schema)
+    groups = ["raqc:cache_fill", "raqc:stats:chunk0:write",
+              "raqc:stats:chunk1:write"] + [
+        f"raqc:{f.name}:chunk{i}:collect"
+        for f in families
+        for i in range(2 if f.splittable else 1)
+    ]
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = {g: set(tracker.getJobIdsForGroup(g)) for g in groups}
+    sc.setJobGroup("caller", "caller's group")
+    try:
+        run_contract(spark, c, s2, s1=s1, commits_dim=commits,
+                     run_dir=str(tmp_path / "groups"), resume=False,
+                     partition_batches=2)
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller"
+    finally:
+        sc.setJobGroup(None, None)
+    missing = [
+        g for g in groups if not set(tracker.getJobIdsForGroup(g)) - before[g]
+    ]
+    assert not missing, missing
