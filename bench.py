@@ -1,9 +1,9 @@
 """Benchmark harness (driver contract: ONE JSON line on stdout).
 
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1) on
-local[$SPARK_GRAFT_CPUS], plus the full validation contract over a cached
-synthesized code-table fixture (the primary metric: constraint-check
-throughput rows/s, BASELINE.json:2).
+local[$SPARK_GRAFT_CPUS] (default: the cores this process may run on), plus
+the full validation contract over a cached synthesized code-table fixture
+(the primary metric: constraint-check throughput rows/s, BASELINE.json:2).
 
 Measurement discipline (BENCH/BASELINE.md: co-tenant load on this sandbox
 swings identical runs up to 6.5x, and round 1's driver-visible number landed
@@ -237,9 +237,16 @@ def _latest_prior_bench(cpus: int, sf) -> dict | None:
     return best or None
 
 
+def _cpus() -> str:
+    """``SPARK_GRAFT_CPUS``, else the cores this process may run on."""
+    return os.environ.get(
+        "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))
+    )
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = _cpus()
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     sf = float(sf) if sf.replace(".", "").isdigit() else sf
 

@@ -15,21 +15,17 @@ from raqc_spark.checks.blocks import verdicts_from_partition_agg, violation_rows
 from raqc_spark.contract import Check
 
 
-def ref_integrity_check(
-    df: DataFrame, dim: DataFrame, check: Check
-) -> tuple[DataFrame, DataFrame]:
+def _dim_keys(dim: DataFrame, keys: list[str]) -> DataFrame:
+    return F.broadcast(dim.select(*keys).dropDuplicates(keys))
+
+
+def ref_table(df: DataFrame, dim: DataFrame, check: Check) -> DataFrame:
+    """The ref-integrity kind's one table: per ``partition_id`` of ``df``,
+    ``n_rows`` and ``n_viol``, the rows whose keys ``dim`` lacks, from one
+    left join onto the broadcast dim keys."""
     keys = list(check.p.get("keys", ("repo", "commit")))
-    dim_keys = F.broadcast(dim.select(*keys).dropDuplicates(keys))
-
-    violations = violation_rows(
-        df.join(dim_keys, keys, "left_anti"),
-        f"'{check.name}'",
-        f"format_string('orphan %s not in dim', concat_ws(':',"
-        f" {', '.join(keys)}))",
-    )
-
-    marked = dim_keys.withColumn("_hit", F.lit(1))
-    agg = (
+    marked = _dim_keys(dim, keys).withColumn("_hit", F.lit(1))
+    return (
         df.join(marked, keys, "left")
         .groupBy("partition_id")
         .agg(
@@ -37,7 +33,19 @@ def ref_integrity_check(
             F.expr("count_if(_hit IS NULL) AS n_viol"),
         )
     )
+
+
+def ref_integrity_check(
+    df: DataFrame, dim: DataFrame, check: Check
+) -> tuple[DataFrame, DataFrame]:
+    keys = list(check.p.get("keys", ("repo", "commit")))
+    violations = violation_rows(
+        df.join(_dim_keys(dim, keys), keys, "left_anti"),
+        f"'{check.name}'",
+        f"format_string('orphan %s not in dim', concat_ws(':',"
+        f" {', '.join(keys)}))",
+    )
     verdicts = verdicts_from_partition_agg(
-        agg, [(check, "n_viol / n_rows", "n_viol")]
+        ref_table(df, dim, check), [(check, "n_viol / n_rows", "n_viol")]
     )
     return verdicts, violations

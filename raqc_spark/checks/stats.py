@@ -141,7 +141,7 @@ def _agg_sql(check: Check) -> list[str]:
         # checkpoints. Quantiles resolve to bin UPPER edges (error = one bin
         # width; log-space by default for heavy-tailed lengths). The
         # (possibly log-scaled) value is read from the `_lqv_<name>` column
-        # compile_stats_pass projects below the agg — aggregate codegen does
+        # stats_table projects below the agg — aggregate codegen does
         # NOT common-subexpression-eliminate across buffers, so an inline
         # log1p would be evaluated once PER EDGE per row (128×).
         num_bins, lo, hi, _log_scale, _ = _quantile_conf(check)
@@ -187,6 +187,27 @@ def _metric_sql(check: Check) -> str:
     raise ValueError(check.kind)
 
 
+def stats_table(df: DataFrame, checks: list[Check]) -> DataFrame:
+    """The stats kinds' one per-partition table: ``n_rows`` plus every
+    check's ``_agg_sql`` columns from ONE ``groupBy(partition_id).agg``.
+    ``df`` carries ``partition_id``; a registry query passes its group
+    column (or a constant) there."""
+    # pre-project each binned-quantile check's (log-scaled) value once —
+    # see the per-edge CSE note in _agg_sql
+    lqv = [
+        f"log1p(CAST({c.column} AS double)) AS _lqv_{c.name}"
+        if _quantile_conf(c)[3]
+        else f"CAST({c.column} AS double) AS _lqv_{c.name}"
+        for c in checks
+        if c.kind == "length_quantiles"
+    ]
+    agg_in = df.selectExpr("*", *lqv) if lqv else df
+    exprs = ["count(1) AS n_rows"]
+    for c in checks:
+        exprs.extend(_agg_sql(c))
+    return agg_in.groupBy("partition_id").agg(*[F.expr(e) for e in exprs])
+
+
 def compile_stats_pass(
     df: DataFrame, checks: list[Check]
 ) -> tuple[DataFrame, DataFrame | None]:
@@ -207,20 +228,7 @@ def compile_stats_pass(
         if c.kind == "approx_distinct" and c.p.get("method") == "salted"
     ]
     fused = [c for c in stats if c not in salted]
-    # pre-project each binned-quantile check's (log-scaled) value once —
-    # see the per-edge CSE note in _agg_sql
-    lqv = [
-        f"log1p(CAST({c.column} AS double)) AS _lqv_{c.name}"
-        if _quantile_conf(c)[3]
-        else f"CAST({c.column} AS double) AS _lqv_{c.name}"
-        for c in fused
-        if c.kind == "length_quantiles"
-    ]
-    agg_in = df.selectExpr("*", *lqv) if lqv else df
-    exprs = ["count(1) AS n_rows"]
-    for c in fused:
-        exprs.extend(_agg_sql(c))
-    agg = agg_in.groupBy("partition_id").agg(*[F.expr(e) for e in exprs])
+    agg = stats_table(df, fused)
 
     # Unpivot every check's verdict out of the ONE agg row per partition — a
     # single projection, so the scan+shuffle run exactly once no matter how

@@ -26,6 +26,59 @@ from raqc_spark.checks.blocks import verdicts_from_partition_agg, violation_rows
 from raqc_spark.contract import Check
 
 
+def _keys(check: Check) -> list[str]:
+    return list(check.p.get("keys", ("repo", "path", "commit")))
+
+
+def dup_key_table(df: DataFrame, check: Check) -> DataFrame:
+    """The uniqueness kind's one table: ``keys`` plus ``count`` for every
+    key that more than one row of ``df`` holds, NULL keys exempt, guarded
+    by ``max_dup_keys``. Tiny by contract: one row per duplicated key."""
+    keys = _keys(check)
+    max_dup_keys = int(check.p.get("max_dup_keys", 2_000_000))
+
+    # NO coalesce(1) here, despite the tiny post-filter output: coalesce has
+    # no stage boundary, so it would pull the FINAL aggregation of this
+    # high-cardinality groupBy into a single task — partial aggs don't
+    # collapse near-unique keys, and one task would merge the whole table
+    # (measured: local[8] contract wall 54s -> 75s at 10.6M rows). The
+    # guard window below pays one tiny exchange instead — only dup keys
+    # move. (The drift/hist cubes DO coalesce(1) safely: their partial aggs
+    # bound per-task output to the cell-cube size.)
+    # "Certain key" semantics, as SQL UNIQUE: a row with a NULL in any key
+    # column is exempt. groupBy lumps NULL keys into one group, but the
+    # left-semi join back never matches them, so uniqueness_check's
+    # partition-key verdict shortcut would count a group that has no sink
+    # rows. Dropping such groups here derives the verdict and the sink from
+    # one frame.
+    is_dup = F.col("count") > 1
+    for k in keys:
+        is_dup &= F.col(k).isNotNull()
+    dup_keys = df.groupBy(*keys).count().filter(is_dup)
+    # Broadcast budget guard (ADVICE r2): a pathological keys config can make
+    # a large share of the table "duplicates"; uniqueness_check's explicit
+    # broadcast would then OOM the driver deep into the run. Enforce the
+    # budget IN-PLAN (count window over the tiny dup-key table + assert_true
+    # inside a filter, which Catalyst cannot prune) so the check fails loud
+    # with a clear message instead. The single-partition window moves only the data
+    # the broadcast was about to collect anyway.
+    n_dup = F.count(F.lit(1)).over(Window.partitionBy(F.lit(1)))
+    guard = F.assert_true(
+        F.col("_n_dup_keys") <= F.lit(max_dup_keys),
+        F.lit(
+            f"uniqueness check {check.name!r}: duplicate-key count exceeds "
+            f"max_dup_keys={max_dup_keys}; the keys config "
+            f"{tuple(keys)!r} likely has too-low cardinality (raise "
+            "max_dup_keys in check params if this volume is intended)"
+        ),
+    )
+    return (
+        dup_keys.withColumn("_n_dup_keys", n_dup)
+        .filter(guard.isNull())
+        .select(*keys, "count")
+    )
+
+
 def uniqueness_check(
     df: DataFrame,
     check: Check,
@@ -44,48 +97,8 @@ def uniqueness_check(
     retained group ``count`` IS its violation-row count) — the verdict
     action re-reads a few cached kilobytes instead of re-running the
     broadcast semi-join over the full table (VERDICT r2 task 1)."""
-    keys = list(check.p.get("keys", ("repo", "path", "commit")))
-    max_dup_keys = int(check.p.get("max_dup_keys", 2_000_000))
-
-    # NO coalesce(1) here, despite the tiny post-filter output: coalesce has
-    # no stage boundary, so it would pull the FINAL aggregation of this
-    # high-cardinality groupBy into a single task — partial aggs don't
-    # collapse near-unique keys, and one task would merge the whole table
-    # (measured: local[8] contract wall 54s -> 75s at 10.6M rows). The
-    # guard window below pays one tiny exchange instead — only dup keys
-    # move. (The drift/hist cubes DO coalesce(1) safely: their partial aggs
-    # bound per-task output to the cell-cube size.)
-    # "Certain key" semantics, as SQL UNIQUE: a row with a NULL in any key
-    # column is exempt. groupBy lumps NULL keys into one group, but the
-    # left-semi join back never matches them, so the partition-key verdict
-    # shortcut below would count a group that has no sink rows. Dropping
-    # such groups here derives the verdict and the sink from one frame.
-    is_dup = F.col("count") > 1
-    for k in keys:
-        is_dup &= F.col(k).isNotNull()
-    dup_keys = df.groupBy(*keys).count().filter(is_dup)
-    # Broadcast budget guard (ADVICE r2): a pathological keys config can make
-    # a large share of the table "duplicates"; the explicit broadcast below
-    # would then OOM the driver deep into the run. Enforce the budget IN-PLAN
-    # (count window over the tiny dup-key table + assert_true inside a
-    # filter, which Catalyst cannot prune) so the check fails loud with a
-    # clear message instead. The single-partition window moves only the data
-    # the broadcast was about to collect anyway.
-    n_dup = F.count(F.lit(1)).over(Window.partitionBy(F.lit(1)))
-    guard = F.assert_true(
-        F.col("_n_dup_keys") <= F.lit(max_dup_keys),
-        F.lit(
-            f"uniqueness check {check.name!r}: duplicate-key count exceeds "
-            f"max_dup_keys={max_dup_keys}; the keys config "
-            f"{tuple(keys)!r} likely has too-low cardinality (raise "
-            "max_dup_keys in check params if this volume is intended)"
-        ),
-    )
-    dup_keys = (
-        dup_keys.withColumn("_n_dup_keys", n_dup)
-        .filter(guard.isNull())
-        .select(*keys, "count")
-    )
+    keys = _keys(check)
+    dup_keys = dup_key_table(df, check)
     if pool is not None:
         dup_keys = dup_keys.persist()
         pool.append(dup_keys)

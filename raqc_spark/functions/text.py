@@ -7,7 +7,7 @@ ANSI-SQL twin for the DuckDB oracle, and none leaves whole-stage codegen.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # stopword markers per language — the n-gram heuristic's evidence table.
@@ -78,9 +78,3 @@ def fingerprint_col(text_col: str = "text") -> Column:
     an exact cross-engine definition)."""
     return F.sha2(F.regexp_replace(F.lower(F.col(text_col)), "\\s+", " "), 256)
 
-
-def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
-    out = df
-    for name, col in quality_cols(text_col).items():
-        out = out.withColumn(name, col)
-    return out

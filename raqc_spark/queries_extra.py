@@ -240,7 +240,9 @@ WHERE rk <= 3
 
 def q_hist_outlier(spark, sf_dir):
     """RAQC's 2D-histogram outlier cut on driver data: docs in rare
-    (lang × n_chars-bucket) cells (raw count < 3) counted per lang."""
+    (lang × n_chars-bucket) cells (raw count < 3) counted per lang. A plain
+    query, not the hist2d_outlier kind: the kind cuts on a smoothed cell
+    FRACTION (``min_cell_frac``, checks/drift.py), this on a raw count."""
     d = load_table(spark, sf_dir, "documents")
     b = bucket_col("n_chars", 0.0, 600.0, 12).alias("len_bucket")
     tagged = d.select("doc_id", "lang", b)
@@ -312,35 +314,6 @@ SELECT event_type, count(*) AS n,
        round(avg(CAST(json_extract_string(props, '$.k') AS INT)), 4) AS avg_k
 FROM events GROUP BY event_type
 """
-
-
-def q_run_contract_verdicts(spark, sf_dir):
-    """Lifecycle surface (S3/S4: checkpoint_write + sink_verdicts): the full
-    contract over driver documents mapped to the code-table shape; returns
-    the verdict rows read back from the run's sinks (rows-only check)."""
-    import tempfile
-
-    from __spark_entry__ import _documents_as_code_table
-    from raqc_spark.contract import default_contract
-    from raqc_spark.runner import run_contract
-
-    s2 = _documents_as_code_table(spark, sf_dir)
-    s1 = s2.filter(F.xxhash64("path") % 2 == 0)
-    commits = s2.select("repo", "commit").distinct()
-    # verdicts are materialized rows (runner.py createDataFrame), so the
-    # run_dir can be reclaimed immediately (ADVICE r5: repeated sweeps were
-    # accumulating orphaned run_dirs in /tmp)
-    import shutil
-
-    run_dir = tempfile.mkdtemp(prefix="raqc_q_")
-    try:
-        res = run_contract(
-            spark, default_contract(), s2, s1=s1, commits_dim=commits,
-            run_dir=run_dir, resume=False,
-        )
-        return res.verdicts
-    finally:
-        shutil.rmtree(run_dir, ignore_errors=True)
 
 
 def q_run_contract_verdicts_oracle(spark, sf_dir):
@@ -436,11 +409,9 @@ SELECT CAST(0 AS INT), 'uniqueness_repo_lang',
 
 
 EXTRA_QUERIES["json_extract"] = q_json_extract
-# run_contract_verdicts (full-contract rows-only lifecycle) lost its
-# registry slot in r6 (VERDICT r5 task 1, 50-row sweep cap): the hash-gated
-# run_contract_verdicts_oracle entry below covers the identical lifecycle
-# (prepare -> fused stats -> sinks -> verdict union) under the stronger
-# check; the full contract stays exercised by entry() and tests/test_runner.
+# the hash-gated run_contract_verdicts_oracle covers the run_contract
+# lifecycle (prepare -> fused stats -> sinks -> verdict union); the full
+# contract stays exercised by entry() and tests/test_runner.
 EXTRA_QUERIES["run_contract_verdicts_oracle"] = q_run_contract_verdicts_oracle
 EXTRA_ORACLE["json_extract"] = SQL_JSON_EXTRACT
 EXTRA_ORACLE["run_contract_verdicts_oracle"] = SQL_RUN_CONTRACT_VERDICTS_ORACLE

@@ -100,14 +100,6 @@ def q_dedup_minhash_lsh(spark, sf_dir):
     )
 
 
-def q_dedup_simhash(spark, sf_dir):
-    """64-bit SimHash per document (deterministic). No registry slot since
-    r6 (50-row sweep cap): signature construction is the first stage of
-    dedup_simhash_pairs below and stays pinned by tests/test_dedup.py."""
-    d = load_table(spark, sf_dir, "documents")
-    return simhash(doc_tokens(d, "doc_id"))
-
-
 def q_dedup_simhash_pairs(spark, sf_dir):
     """SimHash near-duplicate retrieval (VERDICT r1 gap: the signature alone
     finds nothing): 16-bit band buckets -> candidates -> exact hamming <= 3
@@ -520,8 +512,8 @@ PIPELINE_QUERIES = {
     # tokenizer groupBy), multimodal_features now runs the full
     # resize->sample_frames->features pipeline, dedup_simhash (signatures)
     # folded into dedup_simhash_pairs (its first stage; signatures stay
-    # pinned by tests/test_dedup.py), run_contract_verdicts dropped in
-    # favor of the hash-gated run_contract_verdicts_oracle lifecycle.
+    # pinned by tests/test_pipeline_ops.py), run_contract_verdicts dropped
+    # in favor of the hash-gated run_contract_verdicts_oracle lifecycle.
     "doc_fingerprint": q_doc_fingerprint,
     "dedup_embedding_cosine": q_dedup_embedding_cosine,
     "multimodal_meta": q_multimodal_meta,

@@ -175,3 +175,13 @@ def test_prior_scalar_min_merges_records(tmp_path, monkeypatch):
         json.dumps({"cpus": 4, "sf": 0.1, key: 45.8})
     )
     assert bench_mod._prior_scalar(key, 4, 0.1) == 18.6
+
+
+def test_cpus_default_to_the_cores_this_process_may_run_on(monkeypatch):
+    import bench as bench_mod
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(bench_mod.os, "sched_getaffinity", lambda pid: {0, 1, 5})
+    assert bench_mod._cpus() == "3"
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "7")
+    assert bench_mod._cpus() == "7"

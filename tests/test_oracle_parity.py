@@ -111,3 +111,58 @@ def test_length_quantiles_approx_matches_nearest_rank_reference(spark):
         for r in QUERIES["check_length_quantiles_approx"](spark, SF_DIR).collect()
     }
     assert got == want
+
+
+def test_approx_distinct_within_three_sd_of_exact(spark):
+    """``check_approx_distinct`` against exact distinct counts from pandas:
+    each lang's HLL count of ``doc_id`` and of ``source`` lies within
+    3·rsd = 0.15 relative of the true count (rsd = 0.05, Spark's default)."""
+    import pyarrow.parquet as pq
+
+    docs = pq.read_table(
+        f"{SF_DIR}/documents.parquet", columns=["lang", "doc_id", "source"]
+    ).to_pandas()
+    want = docs.groupby("lang").nunique()
+    got = QUERIES["check_approx_distinct"](spark, SF_DIR).collect()
+    assert sorted(r["lang"] for r in got) == sorted(want.index)
+    for r in got:
+        for col, exact in (("approx_docs", "doc_id"), ("approx_sources", "source")):
+            true = want.loc[r["lang"], exact]
+            assert abs(r[col] - true) <= 0.15 * true, (r["lang"], col, r[col], true)
+
+
+# each same-semantics check query and the check kind's table builder it runs
+KIND_BUILDERS = {
+    "check_null_rate": "stats_table",
+    "check_empty_content": "stats_table",
+    "check_bounds": "stats_table",
+    "check_col_stats": "stats_table",
+    "check_approx_distinct": "stats_table",
+    "check_uniqueness": "dup_key_table",
+    "check_ref_integrity": "ref_table",
+}
+
+
+@pytest.mark.parametrize("name", sorted(KIND_BUILDERS))
+def test_check_query_runs_its_kinds_table_builder(spark, monkeypatch, name):
+    """The query builds its DataFrame (no action) through the builder the
+    engine's compiler uses, so its oracle hash checks the engine."""
+    import raqc_spark.queries_core as qc
+    from raqc_spark.checks import integrity, stats, uniqueness
+
+    engine = {
+        "stats_table": stats.stats_table,
+        "dup_key_table": uniqueness.dup_key_table,
+        "ref_table": integrity.ref_table,
+    }
+    calls = []
+    for builder, fn in engine.items():
+        assert getattr(qc, builder) is fn
+
+        def spy(*args, _builder=builder, _fn=fn, **kwargs):
+            calls.append(_builder)
+            return _fn(*args, **kwargs)
+
+        monkeypatch.setattr(qc, builder, spy)
+    QUERIES[name](spark, SF_DIR)
+    assert calls and set(calls) == {KIND_BUILDERS[name]}
