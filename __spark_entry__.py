@@ -16,43 +16,19 @@ from pyspark.sql import functions as F
 SF0001 = "/root/testdata/sf0.001"
 
 
-def _documents_as_code_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Map documents -> (repo, path, commit, lang, content): the engine's
-    input shape (BASELINE.json:15) carved from driver data."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return d.select(
-        F.col("source").alias("repo"),
-        F.concat(F.lit("doc/"), F.col("doc_id").cast("string")).alias("path"),
-        F.substring(F.sha2(F.col("source"), 256), 1, 8).alias("commit"),
-        F.col("lang"),
-        F.col("text").alias("content"),
-    )
-
-
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full validation contract -> verdicts DataFrame (rows > 0)."""
-    import tempfile
-
     from raqc_spark.contract import default_contract
-    from raqc_spark.runner import run_contract
+    from raqc_spark.runner import fresh_verdicts
+    from raqc_spark.sources.testdata import documents_as_code_table
 
-    import shutil
-
-    s2 = _documents_as_code_table(spark, SF0001)
+    s2 = documents_as_code_table(spark, SF0001)
     # previous "snapshot": deterministic subset (drift baseline)
     s1 = s2.filter(F.xxhash64("path") % 2 == 0)
     commits = s2.select("repo", "commit").distinct()
-    # verdicts are materialized rows (runner.py createDataFrame), so the
-    # run_dir is reclaimed immediately (ADVICE r5 orphaned-dirs finding)
-    run_dir = tempfile.mkdtemp(prefix="raqc_entry_")
-    try:
-        result = run_contract(
-            spark, default_contract(), s2, s1=s1, commits_dim=commits,
-            run_dir=run_dir, resume=False,
-        )
-        return result.verdicts
-    finally:
-        shutil.rmtree(run_dir, ignore_errors=True)
+    return fresh_verdicts(
+        spark, default_contract(), s2, s1=s1, commits_dim=commits
+    )
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -8,10 +8,14 @@ Usage:
 Queries default to bench.py's headline set; ``all`` takes every registry
 entry. `plans` writes plans/r07/<query>_<suffix>.txt with
 explain("formatted"). `time` prints one JSON line: {"sf_dir":...,
-"total_s": s, "queries": {name: {"count": s, "noop": s, "procs": [before,
-after]}}}, best-of-3 like bench.py. ``procs`` samples /proc/stat
-procs_running before and after each query's reps: the timing records the
-host's load instead of waiting for it to drop.
+"total_s": s, "queries": {name: {"build": s, "count": s, "noop": s,
+"procs": [before, after]}}}, best-of-3 like bench.py. ``build`` times the
+query function call apart from the action (the driver's parquet footer
+reads and analysis; best of all six builds); ``count`` and ``noop`` time
+the action alone on the built DataFrame (optimization, planning and the
+run). ``procs`` samples /proc/stat procs_running before and after each
+query's reps: the timing records the host's load instead of waiting for
+it to drop.
 """
 
 from __future__ import annotations
@@ -57,6 +61,19 @@ def dump_plans(suffix: str, sf_dir: str, args: list[str]) -> None:
         print(f"wrote {path}")
 
 
+def _best(spark, q, sf_dir: str, act, reps: int) -> tuple[float, float]:
+    """Best-of-``reps`` (build, action) seconds: ``q(spark, sf_dir)`` timed
+    apart from ``act`` on the DataFrame it returns."""
+    build = run = float("inf")
+    for _ in range(reps):
+        t0 = time.perf_counter()
+        df = q(spark, sf_dir)
+        t1 = time.perf_counter()
+        act(df)
+        build, run = min(build, t1 - t0), min(run, time.perf_counter() - t1)
+    return build, run
+
+
 def time_queries(sf_dir: str, args: list[str], reps: int = 3) -> None:
     import __spark_entry__ as entry
 
@@ -70,21 +87,17 @@ def time_queries(sf_dir: str, args: list[str], reps: int = 3) -> None:
         q = queries[name]
         spark.sparkContext.setJobDescription(f"bench_extra {name}")
         p0 = _procs_running()
-        best_c = best_n = None
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            q(spark, sf_dir).count()
-            dt = time.perf_counter() - t0
-            best_c = dt if best_c is None else min(best_c, dt)
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            q(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
-            best_n = dt if best_n is None else min(best_n, dt)
-        out[name] = {"count": round(best_c, 3), "noop": round(best_n, 3),
+        build_c, best_c = _best(spark, q, sf_dir, lambda df: df.count(), reps)
+        build_n, best_n = _best(
+            spark, q, sf_dir,
+            lambda df: df.write.format("noop").mode("overwrite").save(), reps,
+        )
+        build = min(build_c, build_n)
+        out[name] = {"build": round(build, 3), "count": round(best_c, 3),
+                     "noop": round(best_n, 3),
                      "procs": [p0, _procs_running()]}
-        print(f"# {name}: count={best_c:.3f}s noop={best_n:.3f}s",
-              file=sys.stderr)
+        print(f"# {name}: build={build:.3f}s count={best_c:.3f}s "
+              f"noop={best_n:.3f}s", file=sys.stderr)
     total = round(time.perf_counter() - t_all, 3)
     print(json.dumps({"sf_dir": sf_dir, "total_s": total, "queries": out}))
 

@@ -180,13 +180,39 @@ def minhash_signatures(
     return tok.groupBy("doc").agg(F.expr(f"array({mins})").alias("sig"))
 
 
+def band_pairs(banded: DataFrame, *carry: str) -> DataFrame:
+    """Distinct ``doc_a < doc_b`` pairs that share a (band, key) bucket: the
+    one banded-LSH self-join. ``banded`` has one row per (doc, band) with
+    its bucket ``key``; each ``carry`` column rides through the join as
+    ``<col>_a`` / ``<col>_b``. The shuffle keys are (band, key), uniform by
+    construction (hash bits), so no skew/salting is needed."""
+    def side(s: str) -> DataFrame:
+        return banded.select(
+            F.col("doc").alias(f"doc_{s}"), "band", "key",
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
+        )
+
+    return (
+        side("a").join(side("b"), ["band", "key"])
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .select(
+            "doc_a", "doc_b",
+            *[f"{c}_a" for c in carry], *[f"{c}_b" for c in carry],
+        )
+        .distinct()
+    )
+
+
 def lsh_candidate_pairs(
     sig: DataFrame, num_hashes: int = 64, bands: int = 16
 ) -> DataFrame:
     """LSH banding: docs agreeing on all rows of any band become a candidate
-    pair. Band signatures are hashed to one long; the bucket join is an
-    equi-join on (band, bucket_hash) — shuffle keys are uniform by
-    construction (hash values), so no skew/salting needed here."""
+    pair. ``sig`` is (doc, sig array of ``num_hashes`` longs); each band's
+    slice is hashed to one long key for ``band_pairs``."""
+    if num_hashes % bands:
+        raise ValueError(
+            f"bands ({bands}) must divide num_hashes ({num_hashes})"
+        )
     rows_per_band = num_hashes // bands
     banded = sig.select(
         "doc",
@@ -198,16 +224,9 @@ def lsh_candidate_pairs(
         F.xxhash64(
             F.slice(F.col("sig"), F.col("band") * rows_per_band + 1, rows_per_band),
             F.col("band"),
-        ).alias("bucket"),
+        ).alias("key"),
     )
-    a = banded.select(F.col("doc").alias("doc_a"), "band", "bucket")
-    b = banded.select(F.col("doc").alias("doc_b"), "band", "bucket")
-    return (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+    return band_pairs(banded)
 
 
 def minhash_jaccard_estimate(
@@ -315,21 +334,8 @@ def simhash_near_dup_pairs(
             f"shiftright(simhash, CAST(band * {width} AS INT)) & {mask}"
         ).alias("key"),
     )
-    a = banded.select(
-        F.col("doc").alias("doc_a"), F.col("simhash").alias("sh_a"),
-        "band", "key",
-    )
-    b = banded.select(
-        F.col("doc").alias("doc_b"), F.col("simhash").alias("sh_b"),
-        "band", "key",
-    )
-    cand = (
-        a.join(b, ["band", "key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "sh_a", "sh_b")
-        .distinct()
-    )
-    dist = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
+    cand = band_pairs(banded, "simhash")
+    dist = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return (
         cand.withColumn("hamming", dist.cast("int"))
         .filter(F.col("hamming") <= max_hamming)

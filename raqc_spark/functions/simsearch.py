@@ -20,6 +20,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
+from raqc_spark.functions.dedup import lsh_candidate_pairs
+
 
 def _dot(a: Column, b: Column) -> Column:
     # NOTE (r7): an unrolled fixed-dim variant of this fold was prototyped
@@ -44,6 +46,31 @@ def _norm(a: Column) -> Column:
     )
 
 
+def _cosine(a: Column, b: Column, a_norm: Column, b_norm: Column) -> Column:
+    """Cosine rounded to 6 places: the ranking key of every top-k here."""
+    return F.round(_dot(a, b) / (a_norm * b_norm), 6)
+
+
+def _normed(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(doc, vec, norm) rows of an embedding frame."""
+    return emb.select(
+        F.col(id_col).alias("doc"),
+        F.col(vec_col).alias("vec"),
+        _norm(F.col(vec_col)).alias("norm"),
+    )
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """Each query's k best (q_id, c_id, cosine) rows, ranked (cosine DESC,
+    c_id ASC) so the selected SET is stable across engines/parallelism."""
+    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
+    return (
+        scored.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+        .select("q_id", "c_id", "cosine", "rk")
+    )
+
+
 def cosine_topk(
     emb: DataFrame,
     queries: DataFrame,
@@ -56,31 +83,15 @@ def cosine_topk(
     ``queries`` (small) is broadcast; corpus never shuffles until the final
     per-query window over k·|queries| candidate rows.
     """
-    q = queries.select(
-        F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
-    ).withColumn("q_norm", _norm(F.col("q_vec")))
-    c = emb.select(
-        F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec")
-    ).withColumn("c_norm", _norm(F.col("c_vec")))
-
-    scored = (
-        c.join(F.broadcast(q), F.col("c_id") != F.col("q_id"))
-        .withColumn(
-            "cosine",
-            F.round(
-                _dot(F.col("q_vec"), F.col("c_vec"))
-                / (F.col("q_norm") * F.col("c_norm")),
-                6,
-            ),
-        )
-        .select("q_id", "c_id", "cosine")
+    q = _normed(queries, id_col, vec_col).toDF("q_id", "q_vec", "q_norm")
+    c = _normed(emb, id_col, vec_col).toDF("c_id", "c_vec", "c_norm")
+    cosine = _cosine(
+        F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "c_id", "cosine", "rk")
+    scored = c.join(F.broadcast(q), F.col("c_id") != F.col("q_id")).select(
+        "q_id", "c_id", cosine.alias("cosine")
     )
+    return _top_k(scored, k)
 
 
 def _plane_component(plane: Column, dim: Column) -> Column:
@@ -132,32 +143,11 @@ def lsh_candidates(
     uniform hashes, no skew handling needed. Choose bits-per-band ≈
     log2(corpus / wanted_bucket_size) and bands for the recall target.
     """
-    if num_planes % bands:
-        raise ValueError("bands must divide num_planes")
-    r = num_planes // bands
     sig = emb.select(
         F.col(id_col).alias("doc"),
-        sign_bits(F.col(vec_col), num_planes).alias("bits"),
+        sign_bits(F.col(vec_col), num_planes).alias("sig"),
     )
-    banded = sig.select(
-        "doc",
-        "bits",
-        F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band"),
-    ).select(
-        "doc",
-        "band",
-        F.xxhash64(
-            F.slice(F.col("bits"), F.col("band") * r + 1, r), F.col("band")
-        ).alias("key"),
-    )
-    a = banded.select(F.col("doc").alias("doc_a"), "band", "key")
-    b = banded.select(F.col("doc").alias("doc_b"), "band", "key")
-    return (
-        a.join(b, ["band", "key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+    return lsh_candidate_pairs(sig, num_planes, bands)
 
 
 def ivf_ranked_assignments(
@@ -297,11 +287,7 @@ def ivf_cosine_topk(
     if list_splits is None:
         par = emb.sparkSession.sparkContext.defaultParallelism
         list_splits = max(1, (2 * par) // max(1, num_centroids))
-    e = emb.select(
-        F.col(id_col).alias("doc"),
-        F.col(vec_col).alias("vec"),
-        _norm(F.col(vec_col)).alias("norm"),
-    )
+    e = _normed(emb, id_col, vec_col)
     # rk=1 via min_by, NOT a filter: a `rk = 1` filter gets rewritten into a
     # WindowGroupLimit(1) BELOW the window's shuffle, which makes the two
     # sides' exchange subtrees canonicalize differently and defeats exchange
@@ -382,12 +368,7 @@ def ivf_cosine_topk(
     scored = local.select(
         "q_id", "c_id", F.round(F.col("cosine"), 6).alias("cosine")
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "c_id", "cosine", "rk")
-    )
+    return _top_k(scored, k)
 
 
 def lsh_cosine_topk(
@@ -406,35 +387,17 @@ def lsh_cosine_topk(
             F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
         )
     )
-    e = emb.select(
-        F.col(id_col).alias("doc"),
-        F.col(vec_col).alias("vec"),
-        _norm(F.col(vec_col)).alias("norm"),
-    )
-    qa = e.select(
-        F.col("doc").alias("doc_a"), F.col("vec").alias("q_vec"),
-        F.col("norm").alias("q_norm"),
-    )
-    cb = e.select(
-        F.col("doc").alias("doc_b"), F.col("vec").alias("c_vec"),
-        F.col("norm").alias("c_norm"),
+    e = _normed(emb, id_col, vec_col)
+    cosine = _cosine(
+        F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")
     )
     scored = (
-        sym.join(qa, "doc_a")
-        .join(cb, "doc_b")
+        sym.join(e.toDF("doc_a", "q_vec", "q_norm"), "doc_a")
+        .join(e.toDF("doc_b", "c_vec", "c_norm"), "doc_b")
         .select(
             F.col("doc_a").alias("q_id"),
             F.col("doc_b").alias("c_id"),
-            F.round(
-                _dot(F.col("q_vec"), F.col("c_vec"))
-                / (F.col("q_norm") * F.col("c_norm")),
-                6,
-            ).alias("cosine"),
+            cosine.alias("cosine"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "c_id", "cosine", "rk")
-    )
+    return _top_k(scored, k)

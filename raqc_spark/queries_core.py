@@ -34,7 +34,10 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _by(df: DataFrame, group: str | None = None) -> DataFrame:
     """``df`` keyed for the check kinds' table builders: ``partition_id`` is
-    the query's group column, or one constant group."""
+    the query's group column, or one constant group. An empty group yields
+    no row, even the constant one over an empty input (where a SQL global
+    aggregate gives one row of zeros): the engine's own rule, under which
+    a row-less partition has no verdict (the manifest's ``empty`` key)."""
     return df.withColumn("partition_id", F.col(group) if group else F.lit(0))
 
 

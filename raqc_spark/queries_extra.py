@@ -8,6 +8,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from raqc_spark.checks.drift import bucket_col
+from raqc_spark.functions.simsearch import _norm
 from raqc_spark.sources.testdata import load_table
 
 
@@ -328,11 +329,9 @@ def q_run_contract_verdicts_oracle(spark, sf_dir):
     check kinds (no HLL / percentile sketches). Everything the row passes
     through — derive_cols, the shared partition agg, threshold verdicts,
     the manifest/sink plumbing — is the production path."""
-    import tempfile
-
-    from __spark_entry__ import _documents_as_code_table
     from raqc_spark.contract import Check, Contract, PartitionSpec, Threshold
-    from raqc_spark.runner import run_contract
+    from raqc_spark.runner import fresh_verdicts
+    from raqc_spark.sources.testdata import documents_as_code_table
 
     contract = Contract(
         checks=(
@@ -350,17 +349,8 @@ def q_run_contract_verdicts_oracle(spark, sf_dir):
         ),
         partition_spec=PartitionSpec(key="repo", num_partitions=1),
     )
-    s2 = _documents_as_code_table(spark, sf_dir)
-    # run_dir reclaimed right away: verdicts are materialized rows
-    # (ADVICE r5 orphaned-/tmp-dirs finding)
-    import shutil
-
-    run_dir = tempfile.mkdtemp(prefix="raqc_qo_")
-    try:
-        res = run_contract(spark, contract, s2, run_dir=run_dir, resume=False)
-        return res.verdicts
-    finally:
-        shutil.rmtree(run_dir, ignore_errors=True)
+    s2 = documents_as_code_table(spark, sf_dir)
+    return fresh_verdicts(spark, contract, s2)
 
 
 SQL_RUN_CONTRACT_VERDICTS_ORACLE = """
@@ -422,10 +412,7 @@ def q_check_embedding_schema(spark, sf_dir):
     64-dim vector with finite norm; per-label rollup."""
     e = load_table(spark, sf_dir, "embeddings")
     dim_ok = F.size("embedding") == 64
-    norm = F.sqrt(F.aggregate(
-        "embedding", F.lit(0.0),
-        lambda acc, x: acc + x.cast("double") * x.cast("double"),
-    ))
+    norm = _norm(F.col("embedding"))
     return e.groupBy("label").agg(
         F.count(F.lit(1)).alias("n_vecs"),
         F.count_if(~dim_ok).alias("n_bad_dim"),

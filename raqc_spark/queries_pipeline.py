@@ -23,6 +23,8 @@ from raqc_spark.functions.dedup import (
 )
 from raqc_spark.functions.multimodal import documents_as_media, extract_features
 from raqc_spark.functions.simsearch import (
+    _cosine,
+    _norm,
     cosine_topk,
     ivf_cosine_topk,
     lsh_cosine_topk,
@@ -267,16 +269,9 @@ def q_dedup_embedding_cosine(spark, sf_dir):
     b = e.select(
         F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb")
     )
-    from raqc_spark.functions.simsearch import _dot, _norm
-
+    va, vb = F.col("va"), F.col("vb")
     pairs = a.join(b, F.col("id_a") < F.col("id_b")).select(
-        "id_a",
-        "id_b",
-        F.round(
-            _dot(F.col("va"), F.col("vb"))
-            / (_norm(F.col("va")) * _norm(F.col("vb"))),
-            6,
-        ).alias("cosine"),
+        "id_a", "id_b", _cosine(va, vb, _norm(va), _norm(vb)).alias("cosine")
     )
     return pairs.filter(F.col("cosine") >= 0.35)
 
@@ -344,8 +339,9 @@ def q_multimodal_features(spark, sf_dir):
     registry slot): resize (pure-Column truncation stub) -> sample 4
     evenly-spaced frames per media row (Arrow mapInPandas, 1->N expansion)
     -> extract per-frame features (Arrow mapInPandas) -> per-frame_idx
-    rollup. Rows-only check (pandas-UDF outputs have no DuckDB twin);
-    per-path outputs pinned by tests/test_multimodal.py."""
+    rollup. Rows-only check (pandas-UDF outputs have no DuckDB twin); the
+    frame pipeline is pinned by tests/test_sketches_and_udf.py::
+    test_multimodal_frame_sample_and_resize."""
     from raqc_spark.functions.multimodal import resize_media, sample_frames
 
     d = load_table(spark, sf_dir, "documents")
@@ -435,32 +431,22 @@ def q_media_contract_verdicts(spark, sf_dir):
     num_partitions dropped to 1 so partition_id (pmod(xxhash64(repo), P))
     needs no xxhash64 twin and every verdict row is DuckDB-reproducible."""
     import dataclasses
-    import tempfile
 
     from raqc_spark.contract import PartitionSpec
     from raqc_spark.functions.multimodal import (
         default_media_contract,
         media_as_code_table,
     )
-    from raqc_spark.runner import run_contract
+    from raqc_spark.runner import fresh_verdicts
 
     contract = dataclasses.replace(
         default_media_contract(),
         partition_spec=PartitionSpec(key="repo", num_partitions=1),
     )
     d = load_table(spark, sf_dir, "documents")
-    media = media_as_code_table(documents_as_media(d))
-    # run_dir reclaimed right away: verdicts are materialized rows
-    # (ADVICE r5 orphaned-/tmp-dirs finding)
-    import shutil
-
-    run_dir = tempfile.mkdtemp(prefix="raqc_qm_")
-    try:
-        res = run_contract(spark, contract, media, run_dir=run_dir,
-                           resume=False)
-        return res.verdicts
-    finally:
-        shutil.rmtree(run_dir, ignore_errors=True)
+    return fresh_verdicts(
+        spark, contract, media_as_code_table(documents_as_media(d))
+    )
 
 
 SQL_MEDIA_CONTRACT_VERDICTS = """

@@ -39,6 +39,7 @@ import json
 import os
 import re
 import shutil
+import tempfile
 import threading
 import uuid
 from concurrent.futures import ThreadPoolExecutor
@@ -497,3 +498,18 @@ def run_contract(
         schema=VERDICT_SCHEMA,
     )
     return RunResult(verdicts, run_dir, ran, skipped, resumed_parts)
+
+
+def fresh_verdicts(
+    spark: SparkSession, contract: Contract, s2: DataFrame, **kwargs
+) -> DataFrame:
+    """Verdicts of a ``run_contract(resume=False)`` in a throwaway run_dir.
+    The verdicts are materialized rows, so the run_dir (manifest and
+    violation sinks) is removed before they return."""
+    run_dir = tempfile.mkdtemp(prefix="raqc_run_")
+    try:
+        return run_contract(
+            spark, contract, s2, run_dir=run_dir, resume=False, **kwargs
+        ).verdicts
+    finally:
+        shutil.rmtree(run_dir, ignore_errors=True)

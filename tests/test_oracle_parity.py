@@ -166,3 +166,21 @@ def test_check_query_runs_its_kinds_table_builder(spark, monkeypatch, name):
         monkeypatch.setattr(qc, builder, spy)
     QUERIES[name](spark, SF_DIR)
     assert calls and set(calls) == {KIND_BUILDERS[name]}
+
+
+def test_empty_group_yields_no_row(spark):
+    """An empty group has no verdict: over a zero-row frame keyed by the
+    constant group of queries_core._by, the kinds' tables return no row
+    (where a SQL global aggregate returns one row of zeros). A row-less
+    partition of a contract run has no verdict row either."""
+    from raqc_spark.checks.integrity import ref_table
+    from raqc_spark.checks.stats import stats_table
+    from raqc_spark.contract import Check
+    from raqc_spark.queries_core import _by
+
+    df = _by(spark.createDataFrame([], "k long, v double"))
+    dim = spark.createDataFrame([(1,)], "k long")
+    null_rate = Check("v", "null_rate", column="v")
+    fk = Check("fk", "ref_integrity", params=(("keys", ("k",)),))
+    assert stats_table(df, [null_rate]).count() == 0
+    assert ref_table(df, dim, fk).count() == 0

@@ -76,6 +76,64 @@ def test_simhash_pairs_pigeonhole_guard():
         simhash_near_dup_pairs(None, max_hamming=4, bands=4)
 
 
+def test_lsh_bands_must_divide_num_hashes(spark):
+    """A band count that leaves trailing hashes out is refused, not
+    silently banded over the first num_hashes - num_hashes % bands."""
+    from raqc_spark.functions.dedup import lsh_candidate_pairs
+
+    sig = spark.createDataFrame(
+        [(d, list(range(64))) for d in (1, 2)], "doc long, sig array<bigint>"
+    )
+    with pytest.raises(ValueError, match="must divide"):
+        lsh_candidate_pairs(sig, num_hashes=64, bands=10)
+
+
+def test_pipeline_ops_build_through_shared_steps(spark, monkeypatch):
+    """Each banded-LSH candidate join runs dedup.band_pairs and each top-k
+    runs simsearch._top_k: the DataFrames are built (no action) through
+    the one shared step."""
+    from raqc_spark.functions import dedup, simsearch
+
+    calls = []
+    for mod, helper in ((dedup, "band_pairs"), (simsearch, "_top_k")):
+        def spy(*args, _helper=helper, _fn=getattr(mod, helper), **kwargs):
+            calls.append(_helper)
+            return _fn(*args, **kwargs)
+
+        monkeypatch.setattr(mod, helper, spy)
+    emb = spark.createDataFrame(
+        [(i, [float(i), 1.0, -0.5, 2.0]) for i in range(6)],
+        "vec_id long, embedding array<float>",
+    )
+    sig = spark.createDataFrame(
+        [(1, list(range(8)))], "doc long, sig array<bigint>"
+    )
+    sh = spark.createDataFrame([(1, 7), (2, 5)], "doc long, simhash long")
+    builds = {
+        "lsh_candidate_pairs": (
+            lambda: dedup.lsh_candidate_pairs(sig, num_hashes=8, bands=4),
+            {"band_pairs"},
+        ),
+        "simhash_near_dup_pairs": (
+            lambda: dedup.simhash_near_dup_pairs(sh, max_hamming=3, bands=4),
+            {"band_pairs"},
+        ),
+        "cosine_topk": (lambda: simsearch.cosine_topk(emb, emb, k=2), {"_top_k"}),
+        "ivf_cosine_topk": (
+            lambda: simsearch.ivf_cosine_topk(emb, k=2, num_centroids=2, nprobe=2),
+            {"_top_k"},
+        ),
+        "lsh_cosine_topk": (
+            lambda: simsearch.lsh_cosine_topk(emb, k=2, num_planes=4, bands=2),
+            {"band_pairs", "_top_k"},
+        ),
+    }
+    for name, (build, want) in builds.items():
+        calls.clear()
+        build()
+        assert set(calls) == want, (name, calls)
+
+
 def test_minhash_estimate_tracks_exact_jaccard(spark):
     """MinHash est_jaccard on LSH candidates stays within sketch tolerance
     (64 hashes -> se ~ sqrt(j(1-j)/64) <= 0.0625) of exact shingle Jaccard."""

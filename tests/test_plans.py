@@ -108,6 +108,17 @@ def test_ci_grep_result_row_format_only_in_blocks():
     assert all(lit in blocks for lit in literals)
 
 
+def test_ci_grep_engine_never_imports_driver_entry():
+    """The driver entry point imports the engine, never the other way
+    round: the code-table mapping and the fresh-run helper it shares with
+    the registry live in raqc_spark."""
+    found = [
+        p.name for p in ENGINE_DIR.rglob("*.py")
+        if "__spark_entry__" in p.read_text()
+    ]
+    assert not found, found
+
+
 def test_stats_pass_is_single_shared_aggregation(spark, snapshots):
     """The fused stats pass produces ONE Exchange over partition_id for the
     shared agg (not one scan per check)."""
